@@ -9,7 +9,7 @@ import graft.operators.LakeTable
 
 /** Manual lake-layer scale probes (not part of the driver contract).
   *
-  * 1. N-WRITER CONTENTION: N concurrent `mergeWithRetry` writers upsert
+  * 1. N-WRITER CONTENTION: N concurrent `merge` writers upsert
   *    disjoint key ranges of one table. Prints wall time, the landed
   *    version range, and verifies (a) versions are dense (every writer's
   *    commit landed exactly once), (b) the final state equals the
@@ -48,7 +48,7 @@ object LakeProbe {
       val th = new Thread { // one JVM thread per writer, shared session
         var stats: LakeTable.MergeStats = null
         override def run(): Unit =
-          stats = LakeTable.mergeWithRetry(spark, root, batch(i), Seq("k"), "p",
+          stats = LakeTable.merge(spark, root, batch(i), Seq("k"), "p",
             maxRetries = nWriters * 2)
       }
       th.start(); th
@@ -67,7 +67,7 @@ object LakeProbe {
     require(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty,
       "final state != sequential application")
     val probed = LakeTable.snapshot(spark, root).entries.size
-    println(f"[lake] $nWriters concurrent mergeWithRetry writers: $wall%.1f s wall, " +
+    println(f"[lake] $nWriters concurrent merge writers: $wall%.1f s wall, " +
       s"versions 2..${s1.version} dense, state == sequential application, $probed files live")
 
     // ---- 2. manifest scale -----------------------------------------

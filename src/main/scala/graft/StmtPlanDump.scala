@@ -1,6 +1,7 @@
 package graft
 
 import graft.engine.SparkEngine
+import org.apache.spark.sql.GraftColumnBridge
 
 /** Dump the EXECUTED (AQE-final) physical plans of the Spark actions a
   * DML / matview-refresh statement runs — the statement-internal plans
@@ -16,6 +17,7 @@ object StmtPlanDump {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("plans/r22")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     val spark = SparkEngine.session(master = "local[32]", appName = "graft-stmt-plan",
       shufflePartitions = 32)
     spark.conf.set("spark.sql.catalog.graft.warehouse",
@@ -32,10 +34,12 @@ object StmtPlanDump {
           qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
     })
     def capture(label: String, file: String)(f: => Unit): Unit = {
-      Thread.sleep(500) // drain async events of PRIOR statements first
+      // QueryExecutionListener callbacks ride the async listener bus:
+      // drain PRIOR statements' events before clearing, ours after
+      GraftColumnBridge.drainListenerBus(spark)
       plans.clear()
       f
-      Thread.sleep(500) // QueryExecutionListener is async
+      GraftColumnBridge.drainListenerBus(spark)
       import scala.jdk.CollectionConverters._
       val text = s"== statement: $label ==\n\n" + plans.asScala.mkString("\n\n")
       java.nio.file.Files.write(java.nio.file.Paths.get(s"$out/$file"),

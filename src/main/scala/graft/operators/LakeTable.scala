@@ -32,6 +32,12 @@ import org.apache.spark.sql.types.{NumericType, StructType}
   *     the previous snapshot, and `vacuum` reclaims the orphans later.
   *     LakeTableSpec proves both properties by construction (uncommitted
   *     batch invisible; duplicate commit refused).
+  *     Every writer shares ONE conflict contract: a lost race first tries
+  *     to re-commit its entry delta on the winner's head when that is
+  *     provably sequential-equivalent ([[rebaseCommit]]); otherwise it
+  *     throws [[CommitConflict]], and [[withCommitRetry]] re-runs the
+  *     whole verb on the winner's snapshot, at most `maxRetries` times,
+  *     before the conflict surfaces to the caller.
   *
   * Partition-value encoding: directory names use Spark/Hive's
   * `escapePathName` (NOT URL encoding — '+' is a literal character in
@@ -1102,6 +1108,65 @@ object LakeTable {
     publishAtomic(f, tmp, new Path(dir, s"v$v.manifest"))
   }
 
+  /** A writer lost the commit race and could not rebase onto the winner.
+    * An IllegalArgumentException, so callers that predate the type still
+    * catch it; the message always contains "concurrent commit".
+    */
+  final class CommitConflict(msg: String) extends IllegalArgumentException(msg)
+
+  private def conflict(op: String, root: String): CommitConflict =
+    new CommitConflict(s"LakeTable.$op: concurrent commit at $root (retries exhausted)")
+
+  /** Run one optimistic write; on [[CommitConflict]] run it again from
+    * scratch, at most `maxRetries` times, then let the conflict surface.
+    * Nothing else is retried. The recompute is REQUIRED for correctness,
+    * not just convenience: the body re-reads the winner's snapshot and
+    * re-evaluates its predicate/keys against the winner's rows, so the
+    * result is sequential-equivalent whichever writer lands first. A lost
+    * attempt's files are orphans `vacuum` reclaims; the bound keeps a
+    * livelocked writer from spinning forever under contention.
+    */
+  private def withCommitRetry[T](maxRetries: Int)(body: => T): T = {
+    @annotation.tailrec
+    def attempt(retriesLeft: Int): T =
+      (try Some(body) catch { case _: CommitConflict if retriesLeft > 0 => None }) match {
+        case Some(result) => result
+        case None => attempt(retriesLeft - 1)
+      }
+    attempt(maxRetries)
+  }
+
+  /** Commit `entries` as the version after `base`, or throw a conflict. */
+  private def commitNext(
+      spark: SparkSession,
+      root: String,
+      op: String,
+      base: Snapshot,
+      meta: TableMeta,
+      entries: Seq[Entry]): Long =
+    if (commit(spark, root, base.version + 1, meta, entries)) base.version + 1
+    else throw conflict(op, root)
+
+  /** [[commitNext]] for a verb whose change is the delta `removed` →
+    * `written` against `base`: a lost race first tries [[rebaseCommit]]
+    * onto the winner's head and throws a conflict only when that is
+    * unsound. Returns the landed version.
+    */
+  private def commitOrRebase(
+      spark: SparkSession,
+      root: String,
+      op: String,
+      base: Snapshot,
+      meta: TableMeta,
+      entries: Seq[Entry],
+      removed: Seq[Entry],
+      written: Seq[Entry],
+      mayMatch: Entry => Boolean,
+      dvMerge: Boolean = false): Long =
+    if (commit(spark, root, base.version + 1, meta, entries)) base.version + 1
+    else rebaseCommit(spark, root, base, meta, removed, written, mayMatch, dvMerge)
+      .getOrElse(throw conflict(op, root))
+
   // ---- write path ----------------------------------------------------
 
   /** Persist `df` for the duration of one statement UNLESS the caller
@@ -1329,22 +1394,20 @@ object LakeTable {
     * point); values of rows deleted since then become allocatable
     * again, exactly as in Delta. Returns (column, new mark) pairs.
     */
-  def syncIdentity(spark: SparkSession, root: String, maxRetries: Int = 3): Seq[(String, Long)] = {
-    val s0 = snapshot(spark, root)
-    require(s0.version > 0, s"LakeTable.syncIdentity: no committed snapshot at $root")
-    val meta = s0.meta.get
-    val marks = identityOf(meta.schema).map { case (c, start, step, _) =>
-      c -> identityDataBound(spark, root, meta, s0.entries, c, step).getOrElse(start - step)
+  def syncIdentity(spark: SparkSession, root: String, maxRetries: Int = 3): Seq[(String, Long)] =
+    withCommitRetry(maxRetries) {
+      val s0 = snapshot(spark, root)
+      require(s0.version > 0, s"LakeTable.syncIdentity: no committed snapshot at $root")
+      val meta = s0.meta.get
+      val marks = identityOf(meta.schema).map { case (c, start, step, _) =>
+        c -> identityDataBound(spark, root, meta, s0.entries, c, step).getOrElse(start - step)
+      }
+      if (marks.nonEmpty) {
+        val props = meta.props ++ marks.map { case (c, v) => s"identity.hw.$c" -> v.toString }
+        commitNext(spark, root, "syncIdentity", s0, meta.copy(props = props), s0.entries)
+      }
+      marks
     }
-    if (marks.isEmpty) return Nil
-    val props = meta.props ++ marks.map { case (c, v) => s"identity.hw.$c" -> v.toString }
-    if (commit(spark, root, s0.version + 1, meta.copy(props = props), s0.entries)) marks
-    else {
-      require(maxRetries > 0,
-        s"LakeTable.syncIdentity: concurrent commit at $root (retries exhausted)")
-      syncIdentity(spark, root, maxRetries - 1)
-    }
-  }
 
   /** Meta for an insert commit with the identity high-water marks
     * advanced to cover the just-written batch (from its file stats) —
@@ -1935,24 +1998,10 @@ object LakeTable {
       deleteMode = deleteMode, partitionFn = partitionFn, props = props)
     requireNoExplicitIdentity(df, meta, "init")
     val entries = writeBatch(spark, root, df, meta)
-    require(commit(spark, root, 1, advanceIdentityHw(meta, entries), entries),
-      s"LakeTable.init: concurrent commit at $root")
+    if (!commit(spark, root, 1, advanceIdentityHw(meta, entries), entries))
+      throw new CommitConflict(s"LakeTable.init: concurrent commit at $root")
   }
 
-  /** Metadata-only ALTER: commit a new version whose schema gains
-    * `addColumns` (appended; must be nullable — files written before the
-    * change legitimately read NULL for them), loses `dropColumns`
-    * (column-mapped tables only; the field id is retired via the
-    * [[TableMeta.maxFieldId]] high-water mark so old data can never leak
-    * into a later same-named column), renames via `renameColumns`,
-    * and/or replaces the stats/bloom column sets. Data files carry
-    * verbatim — this is one manifest commit, zero data I/O. Existing entries' stats cells are
-    * REMAPPED to the new statsCols order (a column kept keeps its
-    * recorded bounds; a column added records none, so old files are
-    * conservatively never pruned on it — stats/blooms take effect for
-    * batches written AFTER the change, exactly Delta's add-a-bloom
-    * semantics). Returns the committed version.
-    */
   /** Is `to` a SAFE (lossless, order-preserving) widening of `from`?
     * The Iceberg type-promotion set plus the int-family → double cases
     * Spark 4's parquet readers promote natively: every old file keeps
@@ -1998,6 +2047,20 @@ object LakeTable {
     }
   }
 
+  /** Metadata-only ALTER: commit a new version whose schema gains
+    * `addColumns` (appended; must be nullable — files written before the
+    * change legitimately read NULL for them), loses `dropColumns`
+    * (column-mapped tables only; the field id is retired via the
+    * [[TableMeta.maxFieldId]] high-water mark so old data can never leak
+    * into a later same-named column), renames via `renameColumns`,
+    * and/or replaces the stats/bloom column sets. Data files carry
+    * verbatim — this is one manifest commit, zero data I/O. Existing entries' stats cells are
+    * REMAPPED to the new statsCols order (a column kept keeps its
+    * recorded bounds; a column added records none, so old files are
+    * conservatively never pruned on it — stats/blooms take effect for
+    * batches written AFTER the change, exactly Delta's add-a-bloom
+    * semantics). Returns the committed version.
+    */
   def alterTable(
       spark: SparkSession,
       root: String,
@@ -2025,210 +2088,204 @@ object LakeTable {
       // columns (transform/bucket spaces are type-bound) and
       // generated-column inputs (the stored generated value was
       // computed under the old arithmetic type) are refused.
-      widenColumns: Map[String, org.apache.spark.sql.types.DataType] = Map.empty): Long = {
-    deleteMode.foreach(m => require(m == "cow" || m == "mor",
-      s"LakeTable.alterTable: deleteMode must be cow or mor, got $m"))
-    addColumns.foreach(f => require(
-      !f.metadata.contains(GenExprKey) && !f.metadata.contains(IdStartKey),
-      s"LakeTable.alterTable: cannot ADD a GENERATED/IDENTITY column (${f.name}) — " +
-        "existing rows would need a backfill rewrite; create it at table definition time"))
-    val s0 = snapshot(spark, root)
-    require(s0.version > 0, s"LakeTable.alterTable: no committed snapshot at $root")
-    val meta = s0.meta.get
-    // CHECK constraints: names unique; EXISTING data must already
-    // satisfy a new constraint (the Delta ADD CONSTRAINT validation
-    // scan — the one alterTable verb that reads data); a column a
-    // constraint references cannot be renamed or dropped while the
-    // constraint stands
-    addChecks.foreach { case (n, sql) =>
-      require(!meta.checks.exists(_._1 == n) && !dropChecks.contains(n),
-        s"LakeTable.alterTable: CHECK constraint $n already exists")
-      if (s0.entries.nonEmpty)
-        requireChecks(spark, readEntries(spark, root, meta.schema, s0.entries),
-          meta.copy(checks = Seq(n -> sql)), "ADD CONSTRAINT (existing rows)")
-    }
-    dropChecks.foreach(n => require(meta.checks.exists(_._1 == n),
-      s"LakeTable.alterTable: CHECK constraint $n does not exist"))
-    val standingChecks = meta.checks.filterNot(c => dropChecks.contains(c._1))
-    (renameColumns.keys ++ dropColumns).foreach { c =>
-      standingChecks.foreach { case (n, sql) =>
-        val refs = spark.sessionState.sqlParser.parseExpression(sql).collect {
-          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute => a.name
-        }
-        require(!refs.exists(_.equalsIgnoreCase(c)),
-          s"LakeTable.alterTable: column $c is referenced by CHECK constraint $n " +
-            s"($sql) — drop the constraint first")
+      widenColumns: Map[String, org.apache.spark.sql.types.DataType] = Map.empty): Long =
+    withCommitRetry(maxRetries) {
+      deleteMode.foreach(m => require(m == "cow" || m == "mor",
+        s"LakeTable.alterTable: deleteMode must be cow or mor, got $m"))
+      addColumns.foreach(f => require(
+        !f.metadata.contains(GenExprKey) && !f.metadata.contains(IdStartKey),
+        s"LakeTable.alterTable: cannot ADD a GENERATED/IDENTITY column (${f.name}) — " +
+          "existing rows would need a backfill rewrite; create it at table definition time"))
+      val s0 = snapshot(spark, root)
+      require(s0.version > 0, s"LakeTable.alterTable: no committed snapshot at $root")
+      val meta = s0.meta.get
+      // CHECK constraints: names unique; EXISTING data must already
+      // satisfy a new constraint (the Delta ADD CONSTRAINT validation
+      // scan — the one alterTable verb that reads data); a column a
+      // constraint references cannot be renamed or dropped while the
+      // constraint stands
+      addChecks.foreach { case (n, sql) =>
+        require(!meta.checks.exists(_._1 == n) && !dropChecks.contains(n),
+          s"LakeTable.alterTable: CHECK constraint $n already exists")
+        if (s0.entries.nonEmpty)
+          requireChecks(spark, readEntries(spark, root, meta.schema, s0.entries),
+            meta.copy(checks = Seq(n -> sql)), "ADD CONSTRAINT (existing rows)")
       }
-    }
-    addColumns.foreach { f =>
-      require(!meta.schema.fieldNames.exists(_.equalsIgnoreCase(f.name)) ||
-        dropColumns.exists(_.equalsIgnoreCase(f.name)),
-        s"LakeTable.alterTable: column ${f.name} already exists")
-      require(f.nullable,
-        s"LakeTable.alterTable: added column ${f.name} must be nullable " +
-          "(existing files read NULL for it)")
-    }
-    // DROP COLUMN: metadata-only under column mapping — the field leaves
-    // the schema, its data stays in old files but is never requested
-    // (reads match by id), and its id is retired via the high-water mark
-    // so a later ADD (even of the same name) can never resurrect it.
-    dropColumns.foreach { c =>
-      require(meta.schema.fieldNames.contains(c),
-        s"LakeTable.alterTable: DROP column $c does not exist")
-      require(!meta.specs.exists(_._1 == c),
-        s"LakeTable.alterTable: cannot drop partition column $c (current or prior spec)")
-      require(meta.schema(c).metadata.contains(FieldIdKey),
-        s"LakeTable.alterTable: column $c has no field id — the table was " +
-          "created before column mapping; DROP would break reads of existing files")
-      require(!renameColumns.contains(c) && !renameColumns.valuesIterator.contains(c),
-        s"LakeTable.alterTable: column $c cannot be both dropped and renamed")
-    }
-    require(dropColumns.size < meta.schema.size,
-      "LakeTable.alterTable: cannot drop every column")
-    // RENAME COLUMN: metadata-only under column mapping — the field id
-    // stays, the logical name changes, every already-written file keeps
-    // reading by id. Refused for tables whose files predate ids (a
-    // name-matched read after rename would silently return NULL).
-    renameColumns.foreach { case (from, to) =>
-      require(meta.schema.fieldNames.contains(from),
-        s"LakeTable.alterTable: RENAME source column $from does not exist")
-      require(!meta.schema.fieldNames.exists(_.equalsIgnoreCase(to)),
-        s"LakeTable.alterTable: RENAME target column $to already exists")
-      require(!meta.specs.exists(_._1 == from),
-        s"LakeTable.alterTable: cannot rename partition column $from (current or prior spec)")
-      require(meta.schema(from).metadata.contains(FieldIdKey),
-        s"LakeTable.alterTable: column $from has no field id — the table was " +
-          "created before column mapping; RENAME would break reads of existing files")
-    }
-    // TYPE WIDENING validations (keys are the column's CURRENT name —
-    // a SQL statement carries a single ALTER COLUMN change, so widen
-    // never composes with a same-statement rename/drop of its column)
-    widenColumns.foreach { case (c, to) =>
-      require(meta.schema.fieldNames.contains(c),
-        s"LakeTable.alterTable: ALTER COLUMN TYPE column $c does not exist")
-      require(!renameColumns.contains(c) && !dropColumns.contains(c),
-        s"LakeTable.alterTable: column $c cannot be widened and renamed/dropped together")
-      val from = meta.schema(c).dataType
-      require(widens(from, to),
-        s"LakeTable.alterTable: ALTER COLUMN $c TYPE ${to.simpleString} is not a " +
-          s"safe widening of ${from.simpleString} (data files are immutable — only " +
-          "byte/short/int->long, int-family->double, float->double and decimal " +
-          "precision widening read back losslessly)")
-      require(!meta.specs.exists(_._1 == c),
-        s"LakeTable.alterTable: cannot widen partition column $c (current or prior " +
-          "spec) — transform/bucket spaces are type-bound, old files would misprune")
-      require(!meta.schema(c).metadata.contains(GenExprKey),
-        s"LakeTable.alterTable: cannot widen GENERATED column $c — stored values " +
-          "were computed under the old expression type")
-      generatedOf(meta.schema).foreach { case (g, sql) =>
-        val refs = spark.sessionState.sqlParser.parseExpression(sql).collect {
-          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute => a.name
-        }
-        require(!refs.exists(_.equalsIgnoreCase(c)),
-          s"LakeTable.alterTable: column $c is referenced by GENERATED column $g " +
-            s"($sql) — widening would change the expression's result type while " +
-            "stored values keep the old one")
-      }
-    }
-    def renamed(n: String): String = renameColumns.getOrElse(n, n)
-    val dropped = dropColumns.toSet
-    val keptSchema = StructType(meta.schema.fields.filterNot(f => dropped(f.name)))
-    val renamedSchema = StructType(keptSchema.fields.map(f => f.copy(name = renamed(f.name))))
-    // extendSchema assigns fresh field ids on a column-mapped table —
-    // the SAME evolution point as append/merge widening, so a column
-    // added here stays renamable later; the highWater floor spans the
-    // PRE-drop schema, so a just-dropped id is already out of reach
-    val extended = extendSchema(renamedSchema, addColumns, highWater(meta))
-    require(extended.fieldNames.distinct.length == extended.fieldNames.length,
-      s"LakeTable.alterTable: duplicate column names after rename/add " +
-        s"(${extended.fieldNames.mkString(", ")})")
-    setDefaults.keys.foreach { c =>
-      require(extended.fieldNames.contains(c),
-        s"LakeTable.alterTable: SET/DROP DEFAULT column $c does not exist")
-      require(!extended(c).metadata.contains(GenExprKey) &&
-        !extended(c).metadata.contains(IdStartKey),
-        s"LakeTable.alterTable: $c is GENERATED/IDENTITY — it cannot take a DEFAULT")
-    }
-    // widen keys are pre-statement names; extended is post-rename (a
-    // widened column is never renamed in the same call — validated)
-    val widenRenamed: Map[String, org.apache.spark.sql.types.DataType] =
-      widenColumns.map { case (k, v) => renamed(k) -> v }
-    val newSchema = StructType(extended.fields.map { f0 =>
-      // the field id, defaults and every other metadata ride along —
-      // only the logical type changes; old files keep their physical
-      // type and the parquet reader up-converts at scan time
-      val f = widenRenamed.get(f0.name).fold(f0)(t => f0.copy(dataType = t))
-      setDefaults.get(f.name).fold(f) { sqlOpt =>
-        val b = new org.apache.spark.sql.types.MetadataBuilder().withMetadata(f.metadata)
-        sqlOpt match {
-          case Some(sql) => b.putString(CurrentDefaultKey, sql)
-          case None => b.remove(CurrentDefaultKey)
-        }
-        f.copy(metadata = b.build())
-      }
-    })
-    val newStats = statsCols.getOrElse(meta.statsCols.filterNot(dropped).map(renamed))
-    val newBlooms = bloomCols.getOrElse(meta.bloomCols.filterNot(dropped).map(renamed))
-    (newStats ++ newBlooms).foreach(c => require(newSchema.fieldNames.contains(c),
-      s"LakeTable.alterTable: stats/bloom column $c not in the schema"))
-    // renamed bloom columns keep matching sidecar rows written under
-    // their former names (manifest-recorded aliases; zero sidecar I/O).
-    // An alias that collides with a LIVE column name is dropped: new
-    // files write sidecar rows under that name for the OTHER column, and
-    // matching them would consult the wrong bloom (a false prune). The
-    // old column's pre-rename sidecars just stop pruning — conservative.
-    val newAliases0 = renameColumns.foldLeft(meta.bloomAliases -- dropped) {
-      // a column with a sidecar KEY needs no rename alias: its rows are
-      // keyed by the (name-decoupled) key, and aliasing the old name
-      // would match stale pre-widening rows written under it
-      case (acc, (from, to))
-          if meta.bloomCols.contains(from) && !meta.bloomKeys.contains(from) =>
-        (acc - from) + (to -> (from +: acc.getOrElse(from, Nil)))
-      case (acc, (from, to)) => (acc - from) ++ acc.get(from).map(to -> _)
-    }.map { case (cur, olds) =>
-      cur -> olds.filterNot(newSchema.fieldNames.contains)
-    }.filter(_._2.nonEmpty)
-    // rekey widened bloom columns: pre-widening sidecar rows (bits of
-    // the OLD type's hashes) stop matching — conservative, those files
-    // are kept; post-widening writes key rows under the version-stamped
-    // name. Aliases of a rekeyed column are purged for the same reason.
-    val rekeyedBlooms = newBlooms.filter(widenRenamed.contains).toSet
-    val newAliases = newAliases0 -- rekeyedBlooms
-    val newKeys = (meta.bloomKeys -- dropped).map { case (c, k) => renamed(c) -> k } ++
-      rekeyedBlooms.map(c => c -> s"$c#w${s0.version + 1}")
-    val newMeta = meta.copy(schema = newSchema, statsCols = newStats,
-      bloomCols = newBlooms, bloomAliases = newAliases, bloomKeys = newKeys,
-      // retire dropped ids forever (highWater spans the pre-drop schema)
-      maxFieldId = if (dropColumns.nonEmpty) highWater(meta) else meta.maxFieldId,
-      checks = standingChecks ++ addChecks,
-      deleteMode = deleteMode.getOrElse(meta.deleteMode),
-      props = meta.props ++ setProps -- unsetProps)
-    val oldStatsRenamed = meta.statsCols.map(renamed)
-    val entries = s0.entries.map { e =>
-      e.copy(stats = newStats.map { c =>
-        val i = oldStatsRenamed.indexOf(c)
-        if (i >= 0) {
-          val cell = e.stats.lift(i).getOrElse((None: Option[String], None: Option[String]))
-          // a widened stats column re-renders its cells exactly under
-          // the new type in the SAME commit (see rewidenStat: a float
-          // rendering re-read as a double mis-orders against double
-          // bounds — a wrong prune)
-          widenRenamed.get(c).fold(cell) { to =>
-            val from = meta.schema(meta.statsCols(i)).dataType
-            (cell._1.map(rewidenStat(_, from, to)), cell._2.map(rewidenStat(_, from, to)))
+      dropChecks.foreach(n => require(meta.checks.exists(_._1 == n),
+        s"LakeTable.alterTable: CHECK constraint $n does not exist"))
+      val standingChecks = meta.checks.filterNot(c => dropChecks.contains(c._1))
+      (renameColumns.keys ++ dropColumns).foreach { c =>
+        standingChecks.foreach { case (n, sql) =>
+          val refs = spark.sessionState.sqlParser.parseExpression(sql).collect {
+            case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute => a.name
           }
-        } else (None: Option[String], None: Option[String])
+          require(!refs.exists(_.equalsIgnoreCase(c)),
+            s"LakeTable.alterTable: column $c is referenced by CHECK constraint $n " +
+              s"($sql) — drop the constraint first")
+        }
+      }
+      addColumns.foreach { f =>
+        require(!meta.schema.fieldNames.exists(_.equalsIgnoreCase(f.name)) ||
+          dropColumns.exists(_.equalsIgnoreCase(f.name)),
+          s"LakeTable.alterTable: column ${f.name} already exists")
+        require(f.nullable,
+          s"LakeTable.alterTable: added column ${f.name} must be nullable " +
+            "(existing files read NULL for it)")
+      }
+      // DROP COLUMN: metadata-only under column mapping — the field leaves
+      // the schema, its data stays in old files but is never requested
+      // (reads match by id), and its id is retired via the high-water mark
+      // so a later ADD (even of the same name) can never resurrect it.
+      dropColumns.foreach { c =>
+        require(meta.schema.fieldNames.contains(c),
+          s"LakeTable.alterTable: DROP column $c does not exist")
+        require(!meta.specs.exists(_._1 == c),
+          s"LakeTable.alterTable: cannot drop partition column $c (current or prior spec)")
+        require(meta.schema(c).metadata.contains(FieldIdKey),
+          s"LakeTable.alterTable: column $c has no field id — the table was " +
+            "created before column mapping; DROP would break reads of existing files")
+        require(!renameColumns.contains(c) && !renameColumns.valuesIterator.contains(c),
+          s"LakeTable.alterTable: column $c cannot be both dropped and renamed")
+      }
+      require(dropColumns.size < meta.schema.size,
+        "LakeTable.alterTable: cannot drop every column")
+      // RENAME COLUMN: metadata-only under column mapping — the field id
+      // stays, the logical name changes, every already-written file keeps
+      // reading by id. Refused for tables whose files predate ids (a
+      // name-matched read after rename would silently return NULL).
+      renameColumns.foreach { case (from, to) =>
+        require(meta.schema.fieldNames.contains(from),
+          s"LakeTable.alterTable: RENAME source column $from does not exist")
+        require(!meta.schema.fieldNames.exists(_.equalsIgnoreCase(to)),
+          s"LakeTable.alterTable: RENAME target column $to already exists")
+        require(!meta.specs.exists(_._1 == from),
+          s"LakeTable.alterTable: cannot rename partition column $from (current or prior spec)")
+        require(meta.schema(from).metadata.contains(FieldIdKey),
+          s"LakeTable.alterTable: column $from has no field id — the table was " +
+            "created before column mapping; RENAME would break reads of existing files")
+      }
+      // TYPE WIDENING validations (keys are the column's CURRENT name —
+      // a SQL statement carries a single ALTER COLUMN change, so widen
+      // never composes with a same-statement rename/drop of its column)
+      widenColumns.foreach { case (c, to) =>
+        require(meta.schema.fieldNames.contains(c),
+          s"LakeTable.alterTable: ALTER COLUMN TYPE column $c does not exist")
+        require(!renameColumns.contains(c) && !dropColumns.contains(c),
+          s"LakeTable.alterTable: column $c cannot be widened and renamed/dropped together")
+        val from = meta.schema(c).dataType
+        require(widens(from, to),
+          s"LakeTable.alterTable: ALTER COLUMN $c TYPE ${to.simpleString} is not a " +
+            s"safe widening of ${from.simpleString} (data files are immutable — only " +
+            "byte/short/int->long, int-family->double, float->double and decimal " +
+            "precision widening read back losslessly)")
+        require(!meta.specs.exists(_._1 == c),
+          s"LakeTable.alterTable: cannot widen partition column $c (current or prior " +
+            "spec) — transform/bucket spaces are type-bound, old files would misprune")
+        require(!meta.schema(c).metadata.contains(GenExprKey),
+          s"LakeTable.alterTable: cannot widen GENERATED column $c — stored values " +
+            "were computed under the old expression type")
+        generatedOf(meta.schema).foreach { case (g, sql) =>
+          val refs = spark.sessionState.sqlParser.parseExpression(sql).collect {
+            case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute => a.name
+          }
+          require(!refs.exists(_.equalsIgnoreCase(c)),
+            s"LakeTable.alterTable: column $c is referenced by GENERATED column $g " +
+              s"($sql) — widening would change the expression's result type while " +
+              "stored values keep the old one")
+        }
+      }
+      def renamed(n: String): String = renameColumns.getOrElse(n, n)
+      val dropped = dropColumns.toSet
+      val keptSchema = StructType(meta.schema.fields.filterNot(f => dropped(f.name)))
+      val renamedSchema = StructType(keptSchema.fields.map(f => f.copy(name = renamed(f.name))))
+      // extendSchema assigns fresh field ids on a column-mapped table —
+      // the SAME evolution point as append/merge widening, so a column
+      // added here stays renamable later; the highWater floor spans the
+      // PRE-drop schema, so a just-dropped id is already out of reach
+      val extended = extendSchema(renamedSchema, addColumns, highWater(meta))
+      require(extended.fieldNames.distinct.length == extended.fieldNames.length,
+        s"LakeTable.alterTable: duplicate column names after rename/add " +
+          s"(${extended.fieldNames.mkString(", ")})")
+      setDefaults.keys.foreach { c =>
+        require(extended.fieldNames.contains(c),
+          s"LakeTable.alterTable: SET/DROP DEFAULT column $c does not exist")
+        require(!extended(c).metadata.contains(GenExprKey) &&
+          !extended(c).metadata.contains(IdStartKey),
+          s"LakeTable.alterTable: $c is GENERATED/IDENTITY — it cannot take a DEFAULT")
+      }
+      // widen keys are pre-statement names; extended is post-rename (a
+      // widened column is never renamed in the same call — validated)
+      val widenRenamed: Map[String, org.apache.spark.sql.types.DataType] =
+        widenColumns.map { case (k, v) => renamed(k) -> v }
+      val newSchema = StructType(extended.fields.map { f0 =>
+        // the field id, defaults and every other metadata ride along —
+        // only the logical type changes; old files keep their physical
+        // type and the parquet reader up-converts at scan time
+        val f = widenRenamed.get(f0.name).fold(f0)(t => f0.copy(dataType = t))
+        setDefaults.get(f.name).fold(f) { sqlOpt =>
+          val b = new org.apache.spark.sql.types.MetadataBuilder().withMetadata(f.metadata)
+          sqlOpt match {
+            case Some(sql) => b.putString(CurrentDefaultKey, sql)
+            case None => b.remove(CurrentDefaultKey)
+          }
+          f.copy(metadata = b.build())
+        }
       })
+      val newStats = statsCols.getOrElse(meta.statsCols.filterNot(dropped).map(renamed))
+      val newBlooms = bloomCols.getOrElse(meta.bloomCols.filterNot(dropped).map(renamed))
+      (newStats ++ newBlooms).foreach(c => require(newSchema.fieldNames.contains(c),
+        s"LakeTable.alterTable: stats/bloom column $c not in the schema"))
+      // renamed bloom columns keep matching sidecar rows written under
+      // their former names (manifest-recorded aliases; zero sidecar I/O).
+      // An alias that collides with a LIVE column name is dropped: new
+      // files write sidecar rows under that name for the OTHER column, and
+      // matching them would consult the wrong bloom (a false prune). The
+      // old column's pre-rename sidecars just stop pruning — conservative.
+      val newAliases0 = renameColumns.foldLeft(meta.bloomAliases -- dropped) {
+        // a column with a sidecar KEY needs no rename alias: its rows are
+        // keyed by the (name-decoupled) key, and aliasing the old name
+        // would match stale pre-widening rows written under it
+        case (acc, (from, to))
+            if meta.bloomCols.contains(from) && !meta.bloomKeys.contains(from) =>
+          (acc - from) + (to -> (from +: acc.getOrElse(from, Nil)))
+        case (acc, (from, to)) => (acc - from) ++ acc.get(from).map(to -> _)
+      }.map { case (cur, olds) =>
+        cur -> olds.filterNot(newSchema.fieldNames.contains)
+      }.filter(_._2.nonEmpty)
+      // rekey widened bloom columns: pre-widening sidecar rows (bits of
+      // the OLD type's hashes) stop matching — conservative, those files
+      // are kept; post-widening writes key rows under the version-stamped
+      // name. Aliases of a rekeyed column are purged for the same reason.
+      val rekeyedBlooms = newBlooms.filter(widenRenamed.contains).toSet
+      val newAliases = newAliases0 -- rekeyedBlooms
+      val newKeys = (meta.bloomKeys -- dropped).map { case (c, k) => renamed(c) -> k } ++
+        rekeyedBlooms.map(c => c -> s"$c#w${s0.version + 1}")
+      val newMeta = meta.copy(schema = newSchema, statsCols = newStats,
+        bloomCols = newBlooms, bloomAliases = newAliases, bloomKeys = newKeys,
+        // retire dropped ids forever (highWater spans the pre-drop schema)
+        maxFieldId = if (dropColumns.nonEmpty) highWater(meta) else meta.maxFieldId,
+        checks = standingChecks ++ addChecks,
+        deleteMode = deleteMode.getOrElse(meta.deleteMode),
+        props = meta.props ++ setProps -- unsetProps)
+      val oldStatsRenamed = meta.statsCols.map(renamed)
+      val entries = s0.entries.map { e =>
+        e.copy(stats = newStats.map { c =>
+          val i = oldStatsRenamed.indexOf(c)
+          if (i >= 0) {
+            val cell = e.stats.lift(i).getOrElse((None: Option[String], None: Option[String]))
+            // a widened stats column re-renders its cells exactly under
+            // the new type in the SAME commit (see rewidenStat: a float
+            // rendering re-read as a double mis-orders against double
+            // bounds — a wrong prune)
+            widenRenamed.get(c).fold(cell) { to =>
+              val from = meta.schema(meta.statsCols(i)).dataType
+              (cell._1.map(rewidenStat(_, from, to)), cell._2.map(rewidenStat(_, from, to)))
+            }
+          } else (None: Option[String], None: Option[String])
+        })
+      }
+      commitNext(spark, root, "alterTable", s0, newMeta, entries)
     }
-    if (commit(spark, root, s0.version + 1, newMeta, entries)) s0.version + 1
-    else {
-      require(maxRetries > 0,
-        s"LakeTable.alterTable: concurrent commit at $root (retries exhausted)")
-      alterTable(spark, root, addColumns, statsCols, bloomCols, renameColumns,
-        dropColumns, addChecks, dropChecks, maxRetries - 1, deleteMode,
-        setProps, unsetProps, setDefaults, widenColumns)
-    }
-  }
 
   /** PARTITION SPEC EVOLUTION (`ALTER TABLE ... SET PARTITIONING`, the
     * Iceberg per-spec model): change the partitioning of FUTURE writes
@@ -2244,24 +2301,21 @@ object LakeTable {
       root: String,
       partitionCol: String,
       partitionFn: String = PartitionFn.Identity,
-      maxRetries: Int = 3): Long = {
-    val s0 = snapshot(spark, root)
-    require(s0.version > 0, s"LakeTable.setPartitioning: no committed snapshot at $root")
-    val meta = s0.meta.get
-    require(meta.schema.fieldNames.contains(partitionCol),
-      s"LakeTable.setPartitioning: column $partitionCol not in table schema")
-    PartitionFn.validate(partitionFn, meta.schema(partitionCol).dataType)
-    if (partitionCol == meta.partitionCol && partitionFn == meta.partitionFn)
-      return s0.version // already the current spec — no empty commit
-    val newMeta = meta.copy(partitionCol = partitionCol, partitionFn = partitionFn,
-      priorSpecs = meta.priorSpecs :+ ((meta.partitionCol, meta.partitionFn)))
-    if (commit(spark, root, s0.version + 1, newMeta, s0.entries)) s0.version + 1
-    else {
-      require(maxRetries > 0,
-        s"LakeTable.setPartitioning: concurrent commit at $root (retries exhausted)")
-      setPartitioning(spark, root, partitionCol, partitionFn, maxRetries - 1)
+      maxRetries: Int = 3): Long =
+    withCommitRetry(maxRetries) {
+      val s0 = snapshot(spark, root)
+      require(s0.version > 0, s"LakeTable.setPartitioning: no committed snapshot at $root")
+      val meta = s0.meta.get
+      require(meta.schema.fieldNames.contains(partitionCol),
+        s"LakeTable.setPartitioning: column $partitionCol not in table schema")
+      PartitionFn.validate(partitionFn, meta.schema(partitionCol).dataType)
+      if (partitionCol == meta.partitionCol && partitionFn == meta.partitionFn)
+        s0.version // already the current spec — no empty commit
+      else commitNext(spark, root, "setPartitioning", s0,
+        meta.copy(partitionCol = partitionCol, partitionFn = partitionFn,
+          priorSpecs = meta.priorSpecs :+ ((meta.partitionCol, meta.partitionFn))),
+        s0.entries)
     }
-  }
 
   /** Metadata-only property commit (optimistic, retried): merges `kv`
     * into [[TableMeta.props]] without touching data. Used by derived-
@@ -2272,18 +2326,13 @@ object LakeTable {
       spark: SparkSession,
       root: String,
       kv: Map[String, String],
-      maxRetries: Int = 3): Long = {
-    val s0 = snapshot(spark, root)
-    require(s0.version > 0, s"LakeTable.setProps: no committed snapshot at $root")
-    val meta = s0.meta.get
-    if (commit(spark, root, s0.version + 1, meta.copy(props = meta.props ++ kv), s0.entries))
-      s0.version + 1
-    else {
-      require(maxRetries > 0,
-        s"LakeTable.setProps: concurrent commit at $root (retries exhausted)")
-      setProps(spark, root, kv, maxRetries - 1)
+      maxRetries: Int = 3): Long =
+    withCommitRetry(maxRetries) {
+      val s0 = snapshot(spark, root)
+      require(s0.version > 0, s"LakeTable.setProps: no committed snapshot at $root")
+      val meta = s0.meta.get
+      commitNext(spark, root, "setProps", s0, meta.copy(props = meta.props ++ kv), s0.entries)
     }
-  }
 
   // ---- read path -----------------------------------------------------
 
@@ -2472,19 +2521,16 @@ object LakeTable {
     * rollback, or a replayed post-restore micro-batch would
     * double-insert.
     */
-  def restore(spark: SparkSession, root: String, version: Long, maxRetries: Int = 3): Long = {
-    val s0 = snapshot(spark, root)
-    require(s0.version > 0, s"LakeTable.restore: no committed snapshot at $root")
-    require(version <= s0.version,
-      s"LakeTable.restore: v$version is not in history (head is v${s0.version})")
-    val target = snapshotAt(spark, root, version) // incl. the vacuumed-files refusal
-    val meta = target.meta.get.copy(txns = s0.meta.get.txns)
-    if (commit(spark, root, s0.version + 1, meta, target.entries)) s0.version + 1
-    else {
-      require(maxRetries > 0, s"LakeTable.restore: concurrent commit at $root (retries exhausted)")
-      restore(spark, root, version, maxRetries - 1)
+  def restore(spark: SparkSession, root: String, version: Long, maxRetries: Int = 3): Long =
+    withCommitRetry(maxRetries) {
+      val s0 = snapshot(spark, root)
+      require(s0.version > 0, s"LakeTable.restore: no committed snapshot at $root")
+      require(version <= s0.version,
+        s"LakeTable.restore: v$version is not in history (head is v${s0.version})")
+      val target = snapshotAt(spark, root, version) // incl. the vacuumed-files refusal
+      val meta = target.meta.get.copy(txns = s0.meta.get.txns)
+      commitNext(spark, root, "restore", s0, meta, target.entries)
     }
-  }
 
   /** Time travel: the table exactly as committed at `version` — its own
     * schema, its own file list. Every manifest and every data file is
@@ -3164,8 +3210,8 @@ object LakeTable {
     * table lacks evolve the schema like merge's. No key-uniqueness check
     * is made (a blind insert of an existing key duplicates it — use
     * merge when keys can repeat).
-    */
-  /** `txnAppId`/`txnVersion` make the append IDEMPOTENT (the
+    *
+    * `txnAppId`/`txnVersion` make the append IDEMPOTENT (the
     * transactional-writer pattern): the manifest records the highest
     * txnVersion committed per appId, and an append whose (appId, version)
     * is already at-or-below that watermark is a no-op — so a replayed
@@ -3179,39 +3225,33 @@ object LakeTable {
       df: DataFrame,
       maxRetries: Int = 3,
       txnAppId: Option[String] = None,
-      txnVersion: Long = -1L): MergeStats = {
-    val s0 = snapshot(spark, root)
-    require(s0.version > 0, s"LakeTable.append: no committed snapshot at $root")
-    val meta = s0.meta.get
-    txnAppId.foreach { _ =>
-      require(txnVersion >= 0, "LakeTable.append: txnAppId requires txnVersion >= 0")
-    }
-    // plain if/else, no early return: a non-local `return` here compiles
-    // to a thrown NonLocalReturnControl, which any catch-Throwable wrapper
-    // up-stack would swallow (and Scala 3 rejects outright)
-    if (txnAppId.exists(app => meta.txns.get(app).exists(_ >= txnVersion)))
-      // this (appId, version) already committed — replay, not new data
-      MergeStats(s0.version, 0, 0, s0.entries.size, 0)
-    else {
-      val newFields = df.schema.filterNot(f => meta.schema.fieldNames.contains(f.name))
-      val newMeta = meta.copy(
-        schema = extendSchema(meta.schema, newFields.toSeq, highWater(meta)),
-        txns = txnAppId.fold(meta.txns)(app => meta.txns + (app -> txnVersion)))
-      requireNoExplicitIdentity(df, meta, "append")
-      val written = writeBatch(spark, root, align(df, newMeta.schema), newMeta)
-      if (commit(spark, root, s0.version + 1,
-          advanceIdentityHw(newMeta, written), s0.entries ++ written))
-        MergeStats(s0.version + 1, 0, 0, s0.entries.size, written.size)
+      txnVersion: Long = -1L): MergeStats =
+    withCommitRetry(maxRetries) {
+      val s0 = snapshot(spark, root)
+      require(s0.version > 0, s"LakeTable.append: no committed snapshot at $root")
+      val meta = s0.meta.get
+      txnAppId.foreach { _ =>
+        require(txnVersion >= 0, "LakeTable.append: txnAppId requires txnVersion >= 0")
+      }
+      // the txn watermark is checked on every attempt's snapshot, so a
+      // replay racing its original still cannot double-commit. Plain
+      // if/else, no early `return`: inside the retry closure a return
+      // is non-local (a thrown NonLocalReturnControl; Scala 3 rejects it)
+      if (txnAppId.exists(app => meta.txns.get(app).exists(_ >= txnVersion)))
+        // this (appId, version) already committed — replay, not new data
+        MergeStats(s0.version, 0, 0, s0.entries.size, 0)
       else {
-        // lost the race: the batch is orphaned (vacuum reclaims it);
-        // recompute against the winner's snapshot (the txn watermark is
-        // re-checked there, so a racing replay still cannot double-commit)
-        require(maxRetries > 0,
-          s"LakeTable.append: concurrent commit at $root (retries exhausted)")
-        append(spark, root, df, maxRetries - 1, txnAppId, txnVersion)
+        val newFields = df.schema.filterNot(f => meta.schema.fieldNames.contains(f.name))
+        val newMeta = meta.copy(
+          schema = extendSchema(meta.schema, newFields.toSeq, highWater(meta)),
+          txns = txnAppId.fold(meta.txns)(app => meta.txns + (app -> txnVersion)))
+        requireNoExplicitIdentity(df, meta, "append")
+        val written = writeBatch(spark, root, align(df, newMeta.schema), newMeta)
+        val landed = commitNext(spark, root, "append", s0,
+          advanceIdentityHw(newMeta, written), s0.entries ++ written)
+        MergeStats(landed, 0, 0, s0.entries.size, written.size)
       }
     }
-  }
 
   /** Commit one epoch of a streaming `writeStream.toTable` query. The
     * epoch's files were already written by executor-side DataWriters
@@ -3243,18 +3283,13 @@ object LakeTable {
     if (s0.meta.get.checks.nonEmpty && entries.nonEmpty)
       requireChecks(spark, readEntries(spark, root, s0.meta.get.schema, entries),
         s0.meta.get, "toTable epoch")
-    var attempt = 0
-    var done = false
-    while (!done) {
-      val s = if (attempt == 0) s0 else snapshot(spark, root)
+    // the first attempt commits on s0; a retry on the winner's head
+    val heads = Iterator.single(s0) ++ Iterator.continually(snapshot(spark, root))
+    withCommitRetry(maxRetries) {
+      val s = heads.next()
       val meta = s.meta.get
-      val newMeta = meta.copy(txns = meta.txns + (appId -> epochId))
-      done = commit(spark, root, s.version + 1, newMeta, s.entries ++ entries)
-      if (!done) {
-        attempt += 1
-        require(attempt <= maxRetries,
-          s"LakeTable.appendStreamEpoch: concurrent commit at $root (retries exhausted)")
-      }
+      commitNext(spark, root, "appendStreamEpoch", s,
+        meta.copy(txns = meta.txns + (appId -> epochId)), s.entries ++ entries)
     }
   }
 
@@ -3269,22 +3304,19 @@ object LakeTable {
       spark: SparkSession,
       root: String,
       df: DataFrame,
-      maxRetries: Int = 3): MergeStats = {
-    val s0 = snapshot(spark, root)
-    require(s0.version > 0, s"LakeTable.overwrite: no committed snapshot at $root")
-    val meta = s0.meta.get
-    val newFields = df.schema.filterNot(f => meta.schema.fieldNames.contains(f.name))
-    val newMeta = meta.copy(schema = extendSchema(meta.schema, newFields.toSeq, highWater(meta)))
-    requireNoExplicitIdentity(df, meta, "overwrite")
-    val written = writeBatch(spark, root, align(df, newMeta.schema), newMeta)
-    if (commit(spark, root, s0.version + 1, advanceIdentityHw(newMeta, written), written))
-      MergeStats(s0.version + 1, 0, 0, 0, written.size)
-    else {
-      require(maxRetries > 0,
-        s"LakeTable.overwrite: concurrent commit at $root (retries exhausted)")
-      overwrite(spark, root, df, maxRetries - 1)
+      maxRetries: Int = 3): MergeStats =
+    withCommitRetry(maxRetries) {
+      val s0 = snapshot(spark, root)
+      require(s0.version > 0, s"LakeTable.overwrite: no committed snapshot at $root")
+      val meta = s0.meta.get
+      val newFields = df.schema.filterNot(f => meta.schema.fieldNames.contains(f.name))
+      val newMeta = meta.copy(schema = extendSchema(meta.schema, newFields.toSeq, highWater(meta)))
+      requireNoExplicitIdentity(df, meta, "overwrite")
+      val written = writeBatch(spark, root, align(df, newMeta.schema), newMeta)
+      val landed =
+        commitNext(spark, root, "overwrite", s0, advanceIdentityHw(newMeta, written), written)
+      MergeStats(landed, 0, 0, 0, written.size)
     }
-  }
 
   /** MERGE INTO: rows of `source` matching target rows on `keyCols`
     * replace them (source wins); unmatched source rows are inserted.
@@ -3301,111 +3333,84 @@ object LakeTable {
       root: String,
       source: DataFrame,
       keyCols: Seq[String],
-      partitionCol: String): MergeStats =
-    mergeImpl(spark, root, source, keyCols, partitionCol, () => ())
-
-  /** [[merge]] with a pre-commit hook — the deterministic injection point
-    * LakeTableSpec uses to steal the version number mid-merge and prove
-    * the conflict is detected (a real race hits the same rename).
-    */
-  private[graft] def mergeImpl(
-      spark: SparkSession,
-      root: String,
-      source: DataFrame,
-      keyCols: Seq[String],
       partitionCol: String,
-      preCommit: () => Unit): MergeStats = {
-    val s0 = snapshot(spark, root)
-    require(s0.version > 0, s"LakeTable.merge: no committed snapshot at $root")
-    val meta = s0.meta.get
-    require(meta.partitionCol == partitionCol,
-      s"LakeTable.merge: table is partitioned by ${meta.partitionCol}, not $partitionCol")
-    // schema evolution: columns only the source has widen the table
-    val newFields = source.schema.filterNot(f => meta.schema.fieldNames.contains(f.name))
-    val outSchema = extendSchema(meta.schema, newFields.toSeq, highWater(meta))
-    // the source feeds the key probe, the affected-partition probe AND
-    // the merged write below — persist it for this statement (batch-
-    // sized), so an expensive upsert source computes once
-    val (src, releaseSrc) = persistForStatement(source)
-    val srcKeys = src.select(keyCols.map(col): _*).distinct()
-    try {
+      maxRetries: Int = 3,
+      // test-only: runs between the write and the commit, the
+      // deterministic point for a spec to steal the version number
+      preCommit: () => Unit = () => ()): MergeStats =
+    withCommitRetry(maxRetries) {
+      val s0 = snapshot(spark, root)
+      require(s0.version > 0, s"LakeTable.merge: no committed snapshot at $root")
+      val meta = s0.meta.get
+      require(meta.partitionCol == partitionCol,
+        s"LakeTable.merge: table is partitioned by ${meta.partitionCol}, not $partitionCol")
+      // schema evolution: columns only the source has widen the table
+      val newFields = source.schema.filterNot(f => meta.schema.fieldNames.contains(f.name))
+      val outSchema = extendSchema(meta.schema, newFields.toSeq, highWater(meta))
+      // the source feeds the key probe, the affected-partition probe AND
+      // the merged write below — persist it for this statement (batch-
+      // sized), so an expensive upsert source computes once
+      val (src, releaseSrc) = persistForStatement(source)
+      val srcKeys = src.select(keyCols.map(col): _*).distinct()
+      try {
 
-    // stats/bloom-informed probe: when the manifest records min/max (or
-    // Bloom sidecars) on the key columns, files whose bounds cannot
-    // intersect — or whose blooms exclude every batch key — are pruned
-    // from the probe scan BEFORE any data file is opened: a narrow
-    // upsert batch against a 100 TB table probes the few files that can
-    // hold its keys, not the corpus, even on an unclustered key layout
-    val mayMatch = keyProbeFilter(spark, root, meta, keyCols, srcKeys, Some(src))
-    val probeEntries = s0.entries.filter(mayMatch)
+      // stats/bloom-informed probe: when the manifest records min/max (or
+      // Bloom sidecars) on the key columns, files whose bounds cannot
+      // intersect — or whose blooms exclude every batch key — are pruned
+      // from the probe scan BEFORE any data file is opened: a narrow
+      // upsert batch against a 100 TB table probes the few files that can
+      // hold its keys, not the corpus, even on an unclustered key layout
+      val mayMatch = keyProbeFilter(spark, root, meta, keyCols, srcKeys, Some(src))
+      val probeEntries = s0.entries.filter(mayMatch)
 
-    // partitions holding a matched key (one probe of the surviving files
-    // against the broadcast source keys) ∪ partitions receiving source
-    // rows; NULL partition values go through the same sentinel the
-    // directory listing produces, so a null-keyed partition is rewritten.
-    // Under spec evolution each entry is classified in ITS OWN spec
-    // space (partitionMatcher maps the same rows through every spec).
-    val matchedRows =
-      if (probeEntries.isEmpty) None
-      else Some(readEntries(spark, root, meta.schema, probeEntries)
-        .join(broadcast(srcKeys), keyCols, "left_semi"))
-    val affectedRows = matchedRows
-      .map(m => align(m, outSchema).unionByName(align(src, outSchema)))
-      .getOrElse(align(src, outSchema))
-    val (inAffected, affectedCount) = partitionMatcher(meta, affectedRows)
+      // partitions holding a matched key (one probe of the surviving files
+      // against the broadcast source keys) ∪ partitions receiving source
+      // rows; NULL partition values go through the same sentinel the
+      // directory listing produces, so a null-keyed partition is rewritten.
+      // Under spec evolution each entry is classified in ITS OWN spec
+      // space (partitionMatcher maps the same rows through every spec).
+      val matchedRows =
+        if (probeEntries.isEmpty) None
+        else Some(readEntries(spark, root, meta.schema, probeEntries)
+          .join(broadcast(srcKeys), keyCols, "left_semi"))
+      val affectedRows = matchedRows
+        .map(m => align(m, outSchema).unionByName(align(src, outSchema)))
+        .getOrElse(align(src, outSchema))
+      val (inAffected, affectedCount) = partitionMatcher(meta, affectedRows)
 
-    // file-level COW: inside affected partitions, files whose key stats
-    // are disjoint from the source bounds cannot hold a matched row —
-    // they carry by path (their rows would pass the survivor anti-join
-    // unchanged, so skipping the rewrite is result-identical)
-    val (rewrite, carry) = s0.entries.partition(e => inAffected(e) && mayMatch(e))
-    // survivors of the affected slice: target rows there whose key has no
-    // source match — read ONLY the rewritten files, not the table
-    val survivors =
-      if (rewrite.isEmpty) None
-      else Some(
-        readEntries(spark, root, meta.schema, rewrite)
-          .join(broadcast(srcKeys), keyCols, "left_anti"))
-    val merged = survivors.fold(align(src, outSchema))(s =>
-      align(src, outSchema).unionByName(align(s, outSchema)))
-    val newMeta = meta.copy(schema = outSchema)
-    // upsert source rows are an insert funnel: GENERATED ALWAYS AS
-    // IDENTITY values may not arrive from outside (matched rows are
-    // replaced wholesale, so their identity values re-allocate)
-    requireNoExplicitIdentity(src, newMeta, "merge")
-    val written = writeBatch(spark, root, merged, newMeta)
-    preCommit()
-    val finalMeta = advanceIdentityHw(newMeta, written)
-    val landed: Long =
-      if (commit(spark, root, s0.version + 1, finalMeta, carry ++ written)) s0.version + 1
-      else rebaseCommit(spark, root, s0, finalMeta, rewrite, written, mayMatch)
-        .getOrElse(throw new IllegalArgumentException(
-          s"LakeTable.merge: concurrent commit at $root (retry on a fresh snapshot)"))
-    MergeStats(
-      version = landed,
-      matchedPartitions = affectedCount,
-      filesRewritten = rewrite.size,
-      filesCarried = carry.size,
-      filesWritten = written.size,
-      filesProbed = probeEntries.size)
-    } finally releaseSrc()
-  }
+      // file-level COW: inside affected partitions, files whose key stats
+      // are disjoint from the source bounds cannot hold a matched row —
+      // they carry by path (their rows would pass the survivor anti-join
+      // unchanged, so skipping the rewrite is result-identical)
+      val (rewrite, carry) = s0.entries.partition(e => inAffected(e) && mayMatch(e))
+      // survivors of the affected slice: target rows there whose key has no
+      // source match — read ONLY the rewritten files, not the table
+      val survivors =
+        if (rewrite.isEmpty) None
+        else Some(
+          readEntries(spark, root, meta.schema, rewrite)
+            .join(broadcast(srcKeys), keyCols, "left_anti"))
+      val merged = survivors.fold(align(src, outSchema))(s =>
+        align(src, outSchema).unionByName(align(s, outSchema)))
+      val newMeta = meta.copy(schema = outSchema)
+      // upsert source rows are an insert funnel: GENERATED ALWAYS AS
+      // IDENTITY values may not arrive from outside (matched rows are
+      // replaced wholesale, so their identity values re-allocate)
+      requireNoExplicitIdentity(src, newMeta, "merge")
+      val written = writeBatch(spark, root, merged, newMeta)
+      preCommit()
+      val landed = commitOrRebase(spark, root, "merge", s0, advanceIdentityHw(newMeta, written),
+        carry ++ written, rewrite, written, mayMatch)
+      MergeStats(
+        version = landed,
+        matchedPartitions = affectedCount,
+        filesRewritten = rewrite.size,
+        filesCarried = carry.size,
+        filesWritten = written.size,
+        filesProbed = probeEntries.size)
+      } finally releaseSrc()
+    }
 
-  /** Transactional COW DELETE: remove every row where `predicate` is
-    * TRUE (SQL DELETE semantics — NULL-predicate rows are KEPT). The
-    * compliance face of the lake path: opt-out and contamination
-    * removals on a training corpus must actually rewrite the bytes, not
-    * just filter at read time. Same shape as [[merge]]: only files in
-    * partitions CONTAINING a match are rewritten (one probe pass, itself
-    * manifest-pruned — bounds implied by the predicate's conjunctive
-    * attr-vs-literal comparisons skip files whose recorded min/max
-    * provably hold no match, and those files also carry by path inside
-    * affected partitions), everything else carries by path; atomic
-    * manifest commit; a
-    * re-issued delete is a no-op commit (idempotent). A delete that
-    * removes every row commits a legitimately-empty snapshot — the
-    * manifest's recorded schema keeps the table readable and mergeable.
-    */
   /** File-level pruner for a row predicate (shared by [[delete]] and
     * [[update]]): TRUE = the file may hold a matching row.
     *
@@ -3439,60 +3444,74 @@ object LakeTable {
         bloomPts.forall { case (h, blooms) => blooms.get(e.rel).forall(_.mightContainLong(h)) }
   }
 
+  private def isMor(s: Snapshot): Boolean = s.meta.exists(_.deleteMode == "mor")
+
+  /** Transactional COW DELETE: remove every row where `predicate` is
+    * TRUE (SQL DELETE semantics — NULL-predicate rows are KEPT). The
+    * compliance face of the lake path: opt-out and contamination
+    * removals on a training corpus must actually rewrite the bytes, not
+    * just filter at read time. Same shape as [[merge]]: only files in
+    * partitions CONTAINING a match are rewritten (one probe pass, itself
+    * manifest-pruned — bounds implied by the predicate's conjunctive
+    * attr-vs-literal comparisons skip files whose recorded min/max
+    * provably hold no match, and those files also carry by path inside
+    * affected partitions), everything else carries by path; atomic
+    * manifest commit; a
+    * re-issued delete is a no-op commit (idempotent). A delete that
+    * removes every row commits a legitimately-empty snapshot — the
+    * manifest's recorded schema keeps the table readable and mergeable.
+    * On a `deleteMode=mor` table the same call runs [[deleteMor]]'s
+    * deletion-vector body on the snapshot it already read.
+    */
   def delete(
       spark: SparkSession,
       root: String,
       predicate: Column,
-      partitionCol: String): MergeStats =
-    deleteImpl(spark, root, predicate, partitionCol, () => ())
-
-  private[graft] def deleteImpl(
-      spark: SparkSession,
-      root: String,
-      predicate: Column,
       partitionCol: String,
-      preCommit: () => Unit): MergeStats = {
-    val s0 = snapshot(spark, root)
-    require(s0.version > 0, s"LakeTable.delete: no committed snapshot at $root")
-    val meta = s0.meta.get
-    val mayDelete = predicateFilePruner(spark, root, meta, predicate)
-    val probeEntries = s0.entries.filter(mayDelete)
-    val (inAffected, affectedCount) =
-      if (probeEntries.isEmpty) ((_: Entry) => false, 0)
-      else partitionMatcher(meta,
-        readEntries(spark, root, meta.schema, probeEntries).where(predicate))
-    // file-level COW: stats-disjoint files in affected partitions hold no
-    // row the predicate deletes — carry them by path
-    val (rewrite, carry) = s0.entries.partition(e => inAffected(e) && mayDelete(e))
-    val written =
-      if (rewrite.isEmpty) Nil
-      else writeBatch(
-        spark, root,
-        // DV-aware read: a COW rewrite of a MOR-deleted file also
-        // MATERIALIZES its deletion vector (the rewritten entry is
-        // dv-free)
-        readEntries(spark, root, meta.schema, rewrite)
-          .where(!coalesce(predicate, lit(false))),
-        meta,
-        // surviving rows keep their partition value — the rewrite is
-        // already partition-aligned, skip the write shuffle. Only sound
-        // when every rewritten file already carries the CURRENT spec: a
-        // pre-evolution file re-partitions under the new spec, where the
-        // scan layout means nothing (one old file would scatter across
-        // many new values as task-sized fragments).
-        preserveLayout = rewrite.forall(_.spec == meta.currentSpec))
-    // a lost race first tries the metadata-only rebase (same conditions
-    // as merge: untouched read set, winner's new files provably hold no
-    // predicate match) before the caller recomputes
-    preCommit()
-    val landed: Long =
-      if (commit(spark, root, s0.version + 1, meta, carry ++ written)) s0.version + 1
-      else rebaseCommit(spark, root, s0, meta, rewrite, written, mayDelete)
-        .getOrElse(throw new IllegalArgumentException(
-          s"LakeTable.delete: concurrent commit at $root (retry on a fresh snapshot)"))
-    MergeStats(landed, affectedCount, rewrite.size, carry.size, written.size,
-      filesProbed = probeEntries.size)
-  }
+      maxRetries: Int = 3,
+      preCommit: () => Unit = () => ()): MergeStats =
+    withCommitRetry(maxRetries) {
+      val s0 = snapshot(spark, root)
+      if (isMor(s0)) deleteMorAt(spark, root, s0, predicate, partitionCol, preCommit)
+      else {
+        require(s0.version > 0, s"LakeTable.delete: no committed snapshot at $root")
+        val meta = s0.meta.get
+        val mayDelete = predicateFilePruner(spark, root, meta, predicate)
+        val probeEntries = s0.entries.filter(mayDelete)
+        val (inAffected, affectedCount) =
+          if (probeEntries.isEmpty) ((_: Entry) => false, 0)
+          else partitionMatcher(meta,
+            readEntries(spark, root, meta.schema, probeEntries).where(predicate))
+        // file-level COW: stats-disjoint files in affected partitions hold no
+        // row the predicate deletes — carry them by path
+        val (rewrite, carry) = s0.entries.partition(e => inAffected(e) && mayDelete(e))
+        val written =
+          if (rewrite.isEmpty) Nil
+          else writeBatch(
+            spark, root,
+            // DV-aware read: a COW rewrite of a MOR-deleted file also
+            // MATERIALIZES its deletion vector (the rewritten entry is
+            // dv-free)
+            readEntries(spark, root, meta.schema, rewrite)
+              .where(!coalesce(predicate, lit(false))),
+            meta,
+            // surviving rows keep their partition value — the rewrite is
+            // already partition-aligned, skip the write shuffle. Only sound
+            // when every rewritten file already carries the CURRENT spec: a
+            // pre-evolution file re-partitions under the new spec, where the
+            // scan layout means nothing (one old file would scatter across
+            // many new values as task-sized fragments).
+            preserveLayout = rewrite.forall(_.spec == meta.currentSpec))
+        // a lost race first tries the metadata-only rebase (same conditions
+        // as merge: untouched read set, winner's new files provably hold no
+        // predicate match) before the retry recomputes
+        preCommit()
+        val landed = commitOrRebase(spark, root, "delete", s0, meta, carry ++ written,
+          rewrite, written, mayDelete)
+        MergeStats(landed, affectedCount, rewrite.size, carry.size, written.size,
+          filesProbed = probeEntries.size)
+      }
+    }
 
   /** MERGE-ON-READ DELETE via deletion vectors: rows matching
     * `predicate` are recorded as dead POSITIONS in per-file [[Dv]]
@@ -3506,14 +3525,95 @@ object LakeTable {
     * cardinality) triples and commits the manifest swap. A file whose every
     * row is dead drops from the manifest entirely (no tombstone chains);
     * stats/Bloom pruning still gates which files are probed at all.
-    * Same optimistic-concurrency contract as [[delete]].
+    * [[delete]] takes this body on `deleteMode=mor` tables; calling it
+    * directly forces deletion vectors whatever the table's mode.
     */
-  /** Distributed DV sidecar publication: one TASK-side write per
-    * touched file — the driver receives only (file-key, sidecar rel,
-    * dead cardinality) triples, never bitmap bytes, so a mass MOR
-    * delete touching millions of files holds driver memory flat (the
-    * round-16 watch-point: collect()ing per-file bitmap blobs put the
-    * whole delete's bitmaps on the driver before any sidecar write).
+  private[graft] def deleteMor(
+      spark: SparkSession,
+      root: String,
+      predicate: Column,
+      partitionCol: String,
+      maxRetries: Int = 3,
+      preCommit: () => Unit = () => ()): MergeStats =
+    withCommitRetry(maxRetries)(
+      deleteMorAt(spark, root, snapshot(spark, root), predicate, partitionCol, preCommit))
+
+  private def deleteMorAt(
+      spark: SparkSession,
+      root: String,
+      s0: Snapshot,
+      predicate: Column,
+      partitionCol: String,
+      preCommit: () => Unit): MergeStats = {
+    require(s0.version > 0, s"LakeTable.deleteMor: no committed snapshot at $root")
+    val meta = s0.meta.get
+    require(meta.partitionCol == partitionCol,
+      s"LakeTable.deleteMor: table is partitioned by ${meta.partitionCol}, not $partitionCol")
+    val mayDelete = predicateFilePruner(spark, root, meta, predicate)
+    val probeEntries = s0.entries.filter(mayDelete)
+    // one distributed pass over the PRUNED files: matched LIVE rows
+    // (already-dead positions are filtered by the scan's own DV
+    // application, so re-deleting is naturally idempotent) aggregate to
+    // one position bitmap per file
+    val sidecars = positionScan(spark, root, meta.schema, probeEntries)
+      .fold(Array.empty[(String, String, Long)])(probed =>
+        publishDvSidecars(spark, root, probed.where(predicate), probeEntries))
+    if (sidecars.isEmpty)
+      MergeStats(s0.version, 0, 0, s0.entries.size, 0, filesProbed = probeEntries.size)
+    else {
+      val t = foldTombstones(s0.entries, probeEntries, sidecars)
+      // lost race → metadata-only rebase: a DV change is remove(old
+      // entry) + write(DV'd entry), so the same conditions as the COW
+      // verbs apply (our touched entries byte-identical at head, the
+      // winner's new files provably predicate-free)
+      preCommit()
+      val landed = commitOrRebase(spark, root, "deleteMor", s0, meta, t.entries,
+        t.removed, t.dvd, mayDelete, dvMerge = true)
+      MergeStats(landed,
+        matchedPartitions = t.removed.map(_.part).distinct.length,
+        // "rewritten" here = files that gained/extended a DV (metadata
+        // only — zero data bytes moved); fully-dead files simply drop
+        filesRewritten = t.removed.size,
+        filesCarried = s0.entries.size - t.removed.size,
+        filesWritten = 0,
+        filesProbed = probeEntries.size)
+    }
+  }
+
+  /** The live rows of `es` with their scan coordinates `__file` (the RAW
+    * url-encoded path; publishing tasks decode it to the manifest's
+    * suffix key) and `__pos` (row index), existing deletion vectors
+    * applied through the same keep filter as reads. The files are read
+    * directly, not via readEntries — the position metadata must be
+    * requested on the scan itself. None when `es` is empty.
+    */
+  private def positionScan(
+      spark: SparkSession,
+      root: String,
+      schema: StructType,
+      es: Seq[Entry]): Option[DataFrame] = {
+    val (dvd, clean) = es.partition(_.dv.isDefined)
+    def scan(files: Seq[Entry], applyDv: Boolean): Option[DataFrame] =
+      if (files.isEmpty) None
+      else {
+        val df = spark.read.schema(schema)
+          .parquet(files.map(e => s"${dataRoot(root)}/${e.rel}"): _*)
+        val kept = if (applyDv) df.where(dvKeepColumn(spark, root, files)) else df
+        Some(kept
+          .withColumn("__file", col("_metadata.file_path"))
+          .withColumn("__pos", col("_metadata.row_index")))
+      }
+    (scan(clean, applyDv = false).toSeq ++ scan(dvd, applyDv = true).toSeq)
+      .reduceOption(_.unionByName(_))
+  }
+
+  /** Distributed DV sidecar publication for the [[positionScan]] rows
+    * `hits` of the `probed` files: one position bitmap per touched file,
+    * built and written TASK-side — the driver receives only (file-key,
+    * sidecar rel, dead cardinality) triples, never bitmap bytes, so a
+    * mass MOR delete touching millions of files holds driver memory flat
+    * (the round-16 watch-point: collect()ing per-file bitmap blobs put
+    * the whole delete's bitmaps on the driver before any sidecar write).
     * Each task unions the file's new dead positions with its existing
     * vector (rel paths broadcast — metadata-sized) and publishes an
     * immutable sidecar via [[Dv.writeFrom]]'s temp-rename commit;
@@ -3523,13 +3623,17 @@ object LakeTable {
   private def publishDvSidecars(
       spark: SparkSession,
       root: String,
-      hits: DataFrame, // __file (url-encoded scan path), __bm (serialized bitmap)
-      existingByKey: Map[String, String]): Array[(String, String, Long)] = {
+      hits: DataFrame,
+      probed: Seq[Entry]): Array[(String, String, Long)] = {
     import spark.implicits._
+    val posAgg = GraftColumnBridge.column(
+      PosBitmapAgg(exprOf(col("__pos"))).toAggregateExpression())
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
-    val bEx = spark.sparkContext.broadcast(existingByKey)
-    try hits.select(col("__file"), col("__bm")).as[(String, Array[Byte])]
+    val bEx = spark.sparkContext.broadcast(
+      probed.flatMap(e => e.dv.map(d => Dv.suffixKey(e.rel) -> d.rel)).toMap)
+    try hits.groupBy(col("__file")).agg(posAgg.as("__bm"))
+      .select(col("__file"), col("__bm")).as[(String, Array[Byte])]
       .mapPartitions { it =>
         it.map { case (file, bytes) =>
           val key = Dv.suffixKey(Dv.decodeUrlPath(file))
@@ -3541,86 +3645,29 @@ object LakeTable {
     finally bEx.destroy()
   }
 
-  def deleteMor(
-      spark: SparkSession,
-      root: String,
-      predicate: Column,
-      partitionCol: String,
-      preCommit: () => Unit = () => ()): MergeStats = {
-    val s0 = snapshot(spark, root)
-    require(s0.version > 0, s"LakeTable.deleteMor: no committed snapshot at $root")
-    val meta = s0.meta.get
-    require(meta.partitionCol == partitionCol,
-      s"LakeTable.deleteMor: table is partitioned by ${meta.partitionCol}, not $partitionCol")
-    val mayDelete = predicateFilePruner(spark, root, meta, predicate)
-    val probeEntries = s0.entries.filter(mayDelete)
-    val byKey = probeEntries.map(e => Dv.suffixKey(e.rel) -> e).toMap
-    // one distributed pass over the PRUNED files: matched LIVE rows
-    // (already-dead positions are filtered by the scan's own DV
-    // application, so re-deleting is naturally idempotent) aggregate to
-    // one position bitmap per file
-    val sidecars: Array[(String, String, Long)] =
-      if (probeEntries.isEmpty) Array.empty
-      else {
-        val posAgg = GraftColumnBridge.column(
-          PosBitmapAgg(exprOf(col("__pos"))).toAggregateExpression())
-        // probe files directly (not via readEntries — the position
-        // metadata must be requested on the scan itself), applying
-        // existing DVs through the same keep filter
-        val (dvd, clean) = probeEntries.partition(_.dv.isDefined)
-        def withPos(es: Seq[Entry], applyDv: Boolean): Option[DataFrame] =
-          if (es.isEmpty) None
-          else {
-            val df = spark.read.schema(meta.schema)
-              .parquet(es.map(e => s"${dataRoot(root)}/${e.rel}"): _*)
-            val kept = if (applyDv) df.where(dvKeepColumn(spark, root, es)) else df
-            // group on the RAW url-encoded path; tasks decode it to the
-            // manifest's suffix key when publishing
-            Some(kept
-              .withColumn("__file", col("_metadata.file_path"))
-              .withColumn("__pos", col("_metadata.row_index")))
-          }
-        val probed = (withPos(clean, applyDv = false).toSeq ++
-          withPos(dvd, applyDv = true).toSeq).reduce(_.unionByName(_))
-        publishDvSidecars(spark, root,
-          probed.where(predicate).groupBy(col("__file")).agg(posAgg.as("__bm")),
-          probeEntries.flatMap(e => e.dv.map(d => Dv.suffixKey(e.rel) -> d.rel)).toMap)
-      }
-    if (sidecars.isEmpty)
-      return MergeStats(s0.version, 0, 0, s0.entries.size, 0, filesProbed = probeEntries.size)
-    val updated: Map[String, Entry] = sidecars.iterator.map { case (key, rel, card) =>
+  /** A MOR verb's manifest change from its published `sidecars`: each
+    * touched entry of `probed` gains its new vector, or drops when every
+    * row is dead (its just-published sidecar is an unreferenced orphan,
+    * reclaimed by vacuum's dv/ sweep).
+    */
+  private case class Tombstones(
+      removed: Seq[Entry], // the touched entries as `base` holds them
+      dvd: Seq[Entry], // their surviving, DV'd replacements
+      entries: Seq[Entry]) // `base` with the change applied, order kept
+
+  private def foldTombstones(
+      base: Seq[Entry],
+      probed: Seq[Entry],
+      sidecars: Array[(String, String, Long)]): Tombstones = {
+    val byKey = probed.map(e => Dv.suffixKey(e.rel) -> e).toMap
+    val fate: Map[String, Option[Entry]] = sidecars.iterator.map { case (key, rel, card) =>
       val e = byKey(key)
-      val entry =
-        // every row dead -> drop the file (its just-published sidecar is
-        // an unreferenced orphan, reclaimed by vacuum's dv/ sweep)
-        if (e.rows.contains(card)) None
-        else Some(e.copy(dv = Some(DvRef(rel, card))))
-      e.rel -> entry
-    }.collect { case (r, e) => r -> e.orNull }.toMap
-    val newEntries = s0.entries.flatMap { e =>
-      if (!updated.contains(e.rel)) Some(e) else Option(updated(e.rel))
-    }
-    // lost race → metadata-only rebase: a DV change is remove(old
-    // entry) + write(DV'd entry), so the same conditions as the COW
-    // verbs apply (our touched entries byte-identical at head, the
-    // winner's new files provably predicate-free)
-    preCommit()
-    val landed: Long =
-      if (commit(spark, root, s0.version + 1, meta, newEntries)) s0.version + 1
-      else rebaseCommit(spark, root, s0, meta,
-        removed = s0.entries.filter(e => updated.contains(e.rel)),
-        written = updated.values.filter(_ != null).toSeq,
-        mayMatch = mayDelete, dvMerge = true)
-        .getOrElse(throw new IllegalArgumentException(
-          s"LakeTable.deleteMor: concurrent commit at $root (retry on a fresh snapshot)"))
-    MergeStats(landed,
-      matchedPartitions = sidecars.map(h => byKey(h._1).part).distinct.length,
-      // "rewritten" here = files that gained/extended a DV (metadata
-      // only — zero data bytes moved); fully-dead files simply drop
-      filesRewritten = updated.size,
-      filesCarried = s0.entries.size - updated.size,
-      filesWritten = 0,
-      filesProbed = probeEntries.size)
+      e.rel -> (if (e.rows.contains(card)) None else Some(e.copy(dv = Some(DvRef(rel, card)))))
+    }.toMap
+    Tombstones(
+      removed = base.filter(e => fate.contains(e.rel)),
+      dvd = fate.values.flatten.toSeq,
+      entries = base.flatMap(e => fate.getOrElse(e.rel, Some(e))))
   }
 
   /** MERGE-ON-READ UPDATE: matched LIVE rows are tombstoned by position
@@ -3633,16 +3680,27 @@ object LakeTable {
     * update nothing, assignments cast to declared types, partition-
     * column assignment moves rows (the appended batch re-partitions),
     * and CHECK constraints validate the updated rows before anything
-    * commits.
+    * commits. [[update]] takes this body on `deleteMode=mor` tables.
     */
-  def updateMor(
+  private[graft] def updateMor(
       spark: SparkSession,
       root: String,
       predicate: Column,
       set: Map[String, Column],
       partitionCol: String,
-      preCommit: () => Unit = () => ()): MergeStats = {
-    val s0 = snapshot(spark, root)
+      maxRetries: Int = 3,
+      preCommit: () => Unit = () => ()): MergeStats =
+    withCommitRetry(maxRetries)(
+      updateMorAt(spark, root, snapshot(spark, root), predicate, set, partitionCol, preCommit))
+
+  private def updateMorAt(
+      spark: SparkSession,
+      root: String,
+      s0: Snapshot,
+      predicate: Column,
+      set: Map[String, Column],
+      partitionCol: String,
+      preCommit: () => Unit): MergeStats = {
     require(s0.version > 0, s"LakeTable.updateMor: no committed snapshot at $root")
     val meta = s0.meta.get
     require(meta.partitionCol == partitionCol,
@@ -3652,98 +3710,37 @@ object LakeTable {
     requireNoIdentitySet(meta, set.keys, "updateMor")
     val mayMatch = predicateFilePruner(spark, root, meta, predicate)
     val probeEntries = s0.entries.filter(mayMatch)
-    val byKey = probeEntries.map(e => Dv.suffixKey(e.rel) -> e).toMap
-    if (probeEntries.isEmpty)
-      return MergeStats(s0.version, 0, 0, s0.entries.size, 0, filesProbed = 0)
-    val (dvd, clean) = probeEntries.partition(_.dv.isDefined)
-    def withPos(es: Seq[Entry], applyDv: Boolean): Option[DataFrame] =
-      if (es.isEmpty) None
-      else {
-        val df = spark.read.schema(meta.schema)
-          .parquet(es.map(e => s"${dataRoot(root)}/${e.rel}"): _*)
-        val kept = if (applyDv) df.where(dvKeepColumn(spark, root, es)) else df
-        Some(kept
-          .withColumn("__file", col("_metadata.file_path"))
-          .withColumn("__pos", col("_metadata.row_index")))
-      }
-    val matched = (withPos(clean, applyDv = false).toSeq ++
-      withPos(dvd, applyDv = true).toSeq).reduce(_.unionByName(_))
-      .where(coalesce(predicate, lit(false)))
-      .persist()
-    try {
-      val posAgg = GraftColumnBridge.column(
-        PosBitmapAgg(exprOf(col("__pos"))).toAggregateExpression())
-      val sidecars = publishDvSidecars(spark, root,
-        matched.groupBy(col("__file")).agg(posAgg.as("__bm")),
-        probeEntries.flatMap(e => e.dv.map(d => Dv.suffixKey(e.rel) -> d.rel)).toMap)
-      if (sidecars.isEmpty)
-        return MergeStats(s0.version, 0, 0, s0.entries.size, 0,
-          filesProbed = probeEntries.size)
-      // updated copies: assignments evaluate against the PRE-update row
-      val updatedRows = matched.select(meta.schema.map { fld =>
-        set.get(fld.name).map(_.cast(fld.dataType).as(fld.name))
-          .getOrElse(col(s"`${fld.name}`"))
-      }.toSeq: _*)
-      val written = writeBatch(spark, root, regenerate(updatedRows, meta, set.keySet), meta)
-      val tombstoned: Map[String, Entry] = sidecars.iterator.map { case (key, rel, card) =>
-        val e = byKey(key)
-        val entry =
-          if (e.rows.contains(card)) None // every row moved out -> drop
-          else Some(e.copy(dv = Some(DvRef(rel, card))))
-        e.rel -> entry.orNull
-      }.toMap
-      val newEntries = s0.entries.flatMap { e =>
-        if (!tombstoned.contains(e.rel)) Some(e) else Option(tombstoned(e.rel))
-      } ++ written
-      // lost race → metadata-only rebase (see deleteMor)
-      preCommit()
-      val landed: Long =
-        if (commit(spark, root, s0.version + 1, meta, newEntries)) s0.version + 1
-        else rebaseCommit(spark, root, s0, meta,
-          removed = s0.entries.filter(e => tombstoned.contains(e.rel)),
-          written = tombstoned.values.filter(_ != null).toSeq ++ written,
-          mayMatch = mayMatch, dvMerge = true)
-          .getOrElse(throw new IllegalArgumentException(
-            s"LakeTable.updateMor: concurrent commit at $root (retry on a fresh snapshot)"))
-      MergeStats(landed,
-        matchedPartitions = sidecars.map(h => byKey(h._1).part).distinct.length,
-        filesRewritten = tombstoned.size,
-        filesCarried = s0.entries.size - tombstoned.size,
-        filesWritten = written.size,
-        filesProbed = probeEntries.size)
-    } finally matched.unpersist()
+    positionScan(spark, root, meta.schema, probeEntries) match {
+      case None => MergeStats(s0.version, 0, 0, s0.entries.size, 0, filesProbed = 0)
+      case Some(probed) =>
+        val matched = probed.where(coalesce(predicate, lit(false))).persist()
+        try {
+          val sidecars = publishDvSidecars(spark, root, matched, probeEntries)
+          if (sidecars.isEmpty)
+            MergeStats(s0.version, 0, 0, s0.entries.size, 0, filesProbed = probeEntries.size)
+          else {
+            // updated copies: assignments evaluate against the PRE-update row
+            val updatedRows = matched.select(meta.schema.map { fld =>
+              set.get(fld.name).map(_.cast(fld.dataType).as(fld.name))
+                .getOrElse(col(s"`${fld.name}`"))
+            }.toSeq: _*)
+            val written =
+              writeBatch(spark, root, regenerate(updatedRows, meta, set.keySet), meta)
+            val t = foldTombstones(s0.entries, probeEntries, sidecars)
+            // lost race → metadata-only rebase (see deleteMor)
+            preCommit()
+            val landed = commitOrRebase(spark, root, "updateMor", s0, meta,
+              t.entries ++ written, t.removed, t.dvd ++ written, mayMatch, dvMerge = true)
+            MergeStats(landed,
+              matchedPartitions = t.removed.map(_.part).distinct.length,
+              filesRewritten = t.removed.size,
+              filesCarried = s0.entries.size - t.removed.size,
+              filesWritten = written.size,
+              filesProbed = probeEntries.size)
+          }
+        } finally matched.unpersist()
+    }
   }
-
-  /** [[updateMor]] with the optimistic-retry loop of [[updateWithRetry]]. */
-  def updateMorWithRetry(
-      spark: SparkSession,
-      root: String,
-      predicate: Column,
-      set: Map[String, Column],
-      partitionCol: String,
-      maxRetries: Int = 3): MergeStats =
-    withCommitRetry(maxRetries)(retriesLeft =>
-      try Some(updateMor(spark, root, predicate, set, partitionCol))
-      catch {
-        case e: IllegalArgumentException
-            if e.getMessage != null && e.getMessage.contains("concurrent commit") &&
-              retriesLeft > 0 => None
-      })
-
-  /** [[deleteMor]] with the optimistic-retry loop of [[deleteWithRetry]]. */
-  def deleteMorWithRetry(
-      spark: SparkSession,
-      root: String,
-      predicate: Column,
-      partitionCol: String,
-      maxRetries: Int = 3): MergeStats =
-    withCommitRetry(maxRetries)(retriesLeft =>
-      try Some(deleteMor(spark, root, predicate, partitionCol))
-      catch {
-        case e: IllegalArgumentException
-            if e.getMessage != null && e.getMessage.contains("concurrent commit") &&
-              retriesLeft > 0 => None
-      })
 
   /** Transactional COW UPDATE: rows where `predicate` is TRUE get the
     * `set` assignments applied (SQL UPDATE semantics — NULL-predicate
@@ -3757,138 +3754,79 @@ object LakeTable {
     * column moves rows between partitions correctly (affected files are
     * rewritten wholesale and the write path re-partitions them).
     * Assignment values are cast to the column's declared type.
+    * On a `deleteMode=mor` table the same call runs [[updateMor]]'s body.
     */
   def update(
       spark: SparkSession,
       root: String,
       predicate: Column,
       set: Map[String, Column],
-      partitionCol: String): MergeStats =
-    updateImpl(spark, root, predicate, set, partitionCol, () => ())
-
-  private[graft] def updateImpl(
-      spark: SparkSession,
-      root: String,
-      predicate: Column,
-      set: Map[String, Column],
       partitionCol: String,
-      preCommit: () => Unit): MergeStats = {
-    val s0 = snapshot(spark, root)
-    require(s0.version > 0, s"LakeTable.update: no committed snapshot at $root")
-    val meta = s0.meta.get
-    require(meta.partitionCol == partitionCol,
-      s"LakeTable.update: table is partitioned by ${meta.partitionCol}, not $partitionCol")
-    set.keys.foreach(c => require(meta.schema.fieldNames.contains(c),
-      s"LakeTable.update: SET column $c not in table schema"))
-    requireNoIdentitySet(meta, set.keys, "update")
-    val mayMatch = predicateFilePruner(spark, root, meta, predicate)
-    val probeEntries = s0.entries.filter(mayMatch)
-    val (inAffected, affectedCount) =
-      if (probeEntries.isEmpty) ((_: Entry) => false, 0)
-      else partitionMatcher(meta,
-        readEntries(spark, root, meta.schema, probeEntries).where(predicate))
-    val (rewrite, carry) = s0.entries.partition(e => inAffected(e) && mayMatch(e))
-    val written =
-      if (rewrite.isEmpty) Nil
+      maxRetries: Int = 3,
+      preCommit: () => Unit = () => ()): MergeStats =
+    withCommitRetry(maxRetries) {
+      val s0 = snapshot(spark, root)
+      if (isMor(s0)) updateMorAt(spark, root, s0, predicate, set, partitionCol, preCommit)
       else {
-        val hit = coalesce(predicate, lit(false))
-        val updated = readEntries(spark, root, meta.schema, rewrite)
-          .select(meta.schema.map { fld =>
-            set.get(fld.name)
-              .map(v => when(hit, v.cast(fld.dataType)).otherwise(col(fld.name)).as(fld.name))
-              .getOrElse(col(fld.name))
-          }.toSeq: _*)
-        // rows keep their partition value unless the SET (or a
-        // regeneration it triggers) can touch the partition source
-        // column — then the rewrite is partition-aligned as read and
-        // needs no write shuffle
-        val layoutStable = !set.keySet.contains(meta.partitionCol) &&
-          generatedOf(meta.schema).forall(_._1 != meta.partitionCol) &&
-          rewrite.forall(_.spec == meta.currentSpec)
-        writeBatch(spark, root, regenerate(updated, meta, set.keySet), meta,
-          preserveLayout = layoutStable)
+        require(s0.version > 0, s"LakeTable.update: no committed snapshot at $root")
+        val meta = s0.meta.get
+        require(meta.partitionCol == partitionCol,
+          s"LakeTable.update: table is partitioned by ${meta.partitionCol}, not $partitionCol")
+        set.keys.foreach(c => require(meta.schema.fieldNames.contains(c),
+          s"LakeTable.update: SET column $c not in table schema"))
+        requireNoIdentitySet(meta, set.keys, "update")
+        val mayMatch = predicateFilePruner(spark, root, meta, predicate)
+        val probeEntries = s0.entries.filter(mayMatch)
+        val (inAffected, affectedCount) =
+          if (probeEntries.isEmpty) ((_: Entry) => false, 0)
+          else partitionMatcher(meta,
+            readEntries(spark, root, meta.schema, probeEntries).where(predicate))
+        val (rewrite, carry) = s0.entries.partition(e => inAffected(e) && mayMatch(e))
+        val written =
+          if (rewrite.isEmpty) Nil
+          else {
+            val hit = coalesce(predicate, lit(false))
+            val updated = readEntries(spark, root, meta.schema, rewrite)
+              .select(meta.schema.map { fld =>
+                set.get(fld.name)
+                  .map(v => when(hit, v.cast(fld.dataType)).otherwise(col(fld.name)).as(fld.name))
+                  .getOrElse(col(fld.name))
+              }.toSeq: _*)
+            // rows keep their partition value unless the SET (or a
+            // regeneration it triggers) can touch the partition source
+            // column — then the rewrite is partition-aligned as read and
+            // needs no write shuffle
+            val layoutStable = !set.keySet.contains(meta.partitionCol) &&
+              generatedOf(meta.schema).forall(_._1 != meta.partitionCol) &&
+              rewrite.forall(_.spec == meta.currentSpec)
+            writeBatch(spark, root, regenerate(updated, meta, set.keySet), meta,
+              preserveLayout = layoutStable)
+          }
+        // lost race → metadata-only rebase when sound (see delete), else
+        // the retry recomputes against the winner's snapshot
+        preCommit()
+        val landed = commitOrRebase(spark, root, "update", s0, meta, carry ++ written,
+          rewrite, written, mayMatch)
+        MergeStats(landed, affectedCount, rewrite.size, carry.size, written.size,
+          filesProbed = probeEntries.size)
       }
-    // lost race → metadata-only rebase when sound (see delete), else
-    // the retry wrapper recomputes against the winner's snapshot
-    preCommit()
-    val landed: Long =
-      if (commit(spark, root, s0.version + 1, meta, carry ++ written)) s0.version + 1
-      else rebaseCommit(spark, root, s0, meta, rewrite, written, mayMatch)
-        .getOrElse(throw new IllegalArgumentException(
-          s"LakeTable.update: concurrent commit at $root (retry on a fresh snapshot)"))
-    MergeStats(landed, affectedCount, rewrite.size, carry.size, written.size,
-      filesProbed = probeEntries.size)
-  }
-
-  /** [[update]]/[[delete]] with the same optimistic-concurrency retry
-    * loop as [[mergeWithRetry]]: the SQL DML path routes through these,
-    * so a statement that loses a commit race recomputes against the
-    * winner's snapshot instead of surfacing a "concurrent commit" error
-    * to the user. The recompute is REQUIRED for correctness, not just
-    * convenience: the predicate re-evaluates against the winner's rows,
-    * so sequential-equivalence holds whichever writer lands first.
-    */
-  def updateWithRetry(
-      spark: SparkSession,
-      root: String,
-      predicate: Column,
-      set: Map[String, Column],
-      partitionCol: String,
-      maxRetries: Int = 3): MergeStats =
-    withCommitRetry(maxRetries)(retriesLeft =>
-      try Some(update(spark, root, predicate, set, partitionCol))
-      catch {
-        case e: IllegalArgumentException
-            if e.getMessage != null && e.getMessage.contains("concurrent commit") &&
-              retriesLeft > 0 => None
-      })
-
-  def deleteWithRetry(
-      spark: SparkSession,
-      root: String,
-      predicate: Column,
-      partitionCol: String,
-      maxRetries: Int = 3): MergeStats =
-    withCommitRetry(maxRetries)(retriesLeft =>
-      try Some(delete(spark, root, predicate, partitionCol))
-      catch {
-        case e: IllegalArgumentException
-            if e.getMessage != null && e.getMessage.contains("concurrent commit") &&
-              retriesLeft > 0 => None
-      })
-
-  @annotation.tailrec
-  private def withCommitRetry(retries: Int)(attempt: Int => Option[MergeStats]): MergeStats =
-    attempt(retries) match {
-      case Some(stats) => stats
-      case None => withCommitRetry(retries - 1)(attempt)
     }
 
-  /** [[merge]] with optimistic-concurrency retries: a writer that loses
-    * the commit race recomputes against the WINNER's snapshot and tries
-    * again (its orphaned copy-on-write batch is reclaimed by the next
-    * `vacuum`). This is the standard lakehouse-log loop; bounded retries
-    * keep a livelocked writer from spinning forever under contention.
-    */
-  def mergeWithRetry(
-      spark: SparkSession,
-      root: String,
-      source: DataFrame,
-      keyCols: Seq[String],
-      partitionCol: String,
-      maxRetries: Int = 3): MergeStats =
-    mergeWithRetryImpl(spark, root, source, keyCols, partitionCol, maxRetries, () => ())
-
-  @annotation.tailrec
-  /** Merges that landed via the lost-commit REBASE fast path (spec
+  /** Writes that landed via the lost-commit REBASE fast path (spec
     * observability: the contention case asserts zero recomputes).
     */
   private[graft] val mergeRebases = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** File-level CONFLICT DETECTION for a lost merge commit (the
-    * Delta-style logical check): instead of recomputing the whole
-    * merge against the winner's snapshot, re-commit this merge's entry
-    * delta ON TOP of it when sequential equivalence provably holds —
+  /** Re-commit attempts [[rebaseCommit]] makes before giving up to a
+    * recompute (each attempt lost to yet another winner).
+    */
+  private val MaxRebases = 5
+
+  /** File-level CONFLICT DETECTION for a lost commit (the Delta-style
+    * logical check): instead of recomputing the whole verb against the
+    * winner's snapshot, re-commit its entry delta (`removed` →
+    * `written`) ON TOP of it when sequential equivalence provably
+    * holds —
     *
     *   1. table METADATA is untouched on both sides (our op changed
     *      none; the winner changed none),
@@ -3903,8 +3841,8 @@ object LakeTable {
     * correctness-required path — the winner's rows must then re-enter
     * the probe). Under real disjoint-writer contention this turns N
     * serialized recomputes into N-1 metadata-only re-commits.
-    */
-  /** `dvMerge` (MOR verbs only) relaxes condition 2 at ROW granularity:
+    *
+    * `dvMerge` (MOR verbs only) relaxes condition 2 at ROW granularity:
     * when the winner touched one of our files but ONLY its deletion
     * vector, and the two ops' NEW tombstone position sets are DISJOINT,
     * sequential equivalence still holds — the loser re-commits with
@@ -3924,14 +3862,13 @@ object LakeTable {
       removed: Seq[Entry],
       written: Seq[Entry],
       mayMatch: Entry => Boolean,
-      maxRebases: Int = 5,
       dvMerge: Boolean = false): Option[Long] = {
     if (ourMeta != base.meta.get) return None // our op changed metadata
     val removedRels = removed.map(_.rel).toSet
     val baseByRel = base.entries.map(e => e.rel -> e).toMap
     val writtenByRel = written.map(e => e.rel -> e).toMap
     val conf = spark.sparkContext.hadoopConfiguration
-    var tries = maxRebases
+    var tries = MaxRebases
     while (tries > 0) {
       tries -= 1
       val head = snapshot(spark, root)
@@ -3988,29 +3925,6 @@ object LakeTable {
       }
     }
     None
-  }
-
-  private[graft] def mergeWithRetryImpl(
-      spark: SparkSession,
-      root: String,
-      source: DataFrame,
-      keyCols: Seq[String],
-      partitionCol: String,
-      maxRetries: Int,
-      preCommit: () => Unit): MergeStats = {
-    val attempt =
-      try Right(mergeImpl(spark, root, source, keyCols, partitionCol, preCommit))
-      catch {
-        case e: IllegalArgumentException
-            if e.getMessage != null && e.getMessage.contains("concurrent commit") &&
-              maxRetries > 0 =>
-          Left(e)
-      }
-    attempt match {
-      case Right(stats) => stats
-      case Left(_) =>
-        mergeWithRetryImpl(spark, root, source, keyCols, partitionCol, maxRetries - 1, preCommit)
-    }
   }
 
   /** One WHEN clause of a general MERGE: `condition` (None =
@@ -4090,6 +4004,10 @@ object LakeTable {
     * SQL NULL semantics throughout: `=` join keys never match NULL, a
     * NULL clause condition does not fire, and later clauses are then
     * consulted.
+    *
+    * On a `deleteMode=mor` table the same call runs [[mergeClausesMor]]'s
+    * body, except with `nullSafeKeys`, which only this body implements.
+    * A lost commit race always recomputes here (no rebase).
     */
   def mergeClauses(
       spark: SparkSession,
@@ -4108,135 +4026,119 @@ object LakeTable {
       // `<=>` key matching: a NULL key matches a NULL key (GROUP BY
       // semantics — NULL is a real group). Required by MatView, whose
       // group keys may be NULL; the default stays SQL MERGE's `=`.
-      nullSafeKeys: Boolean = false): MergeStats = {
-    val s0 = snapshot(spark, root)
-    require(s0.version > 0, s"LakeTable.mergeClauses: no committed snapshot at $root")
-    val meta = metaUpdate(s0.meta.get)
-    require(meta.partitionCol == partitionCol,
-      s"LakeTable.mergeClauses: table is partitioned by ${meta.partitionCol}, not $partitionCol")
-    notMatched.foreach(b => require(b.values.isDefined,
-      "LakeTable.mergeClauses: NOT MATCHED clauses must INSERT"))
-    // identity invariants: UPDATE branches may never SET an identity
-    // column, and INSERT branches may assign a GENERATED ALWAYS AS
-    // IDENTITY column never (BY DEFAULT may) — same gates as
-    // update()/append(), enforced statically on the clause shapes
-    requireMergeIdentityGates(meta, matched ++ notMatchedBySource, notMatched, "mergeClauses")
-    // the source is evaluated several times below (null-key probe, key
-    // distinct for the file probe, and the full-outer merge join) — for
-    // an expensive source (a matview refresh's signed-delta aggregate)
-    // each evaluation would recompute the whole delta. Persist it for
-    // the length of THIS statement only: batch-sized by construction
-    // (the merge input, never the table), released before returning.
-    val (src, releaseSrc) = persistForStatement(source)
-    val srcKeys = src.select(keyCols.map(col): _*).distinct()
-    try {
-
-    // rewrite set: with by-source clauses every target row's fate depends
-    // on the join — no file can carry; otherwise identical to merge()
-    val (rewrite, carry, probed, affectedParts) =
-      if (notMatchedBySource.nonEmpty)
-        (s0.entries, Seq.empty[Entry], s0.entries.size,
-          s0.entries.map(_.part).distinct.size)
-      else {
-        // stats/Bloom pruning is sound only for non-null keys (NULL is
-        // outside every min/max bound) — a null-safe merge whose batch
-        // carries a NULL key must probe every entry. Null presence and
-        // the probe's min/max bounds come from ONE fold over the
-        // persisted source (previously a separate isEmpty probe + a
-        // two-stage aggregate).
-        val keyDts = keyCols.map(k => src.schema(k).dataType)
-        val (foldBounds, keyHasNull) =
-          foldKeyInfo(src.select(keyCols.map(col): _*), keyDts)
-        val srcHasNullKey = nullSafeKeys && keyHasNull.exists(identity)
-        val mayMatch =
-          if (srcHasNullKey) (_: Entry) => true
-          else keyProbeFilter(spark, root, meta, keyCols, srcKeys, Some(src),
-            Some(keyCols.zip(foldBounds).toMap))
-        val probeEntries = s0.entries.filter(mayMatch)
-        val semiCond = (t: String, k: String) =>
-          keyCols.map { c =>
-            if (nullSafeKeys) col(s"$t.`$c`") <=> col(s"$k.`$c`")
-            else col(s"$t.`$c`") === col(s"$k.`$c`")
-          }.reduce(_ && _)
-        val (inMatched, matchedCount) =
-          if (probeEntries.isEmpty) ((_: Entry) => false, 0)
-          else partitionMatcher(meta,
-            readEntries(spark, root, meta.schema, probeEntries).as("t")
-              .join(broadcast(srcKeys).as("k"), semiCond("t", "k"), "left_semi"))
-        val (rw, cy) =
-          s0.entries.partition(e => inMatched(e) && mayMatch(e))
-        (rw, cy, probeEntries.size, matchedCount)
-      }
-
-    val joined = readEntries(spark, root, meta.schema, rewrite)
-      .withColumn("__thit", lit(true)).as("t")
-      .join(
-        src.withColumn("__shit", lit(true)).as("s"),
-        keyCols.map { k =>
-          if (nullSafeKeys) col(s"t.`$k`") <=> col(s"s.`$k`")
-          else col(s"t.`$k`") === col(s"s.`$k`")
-        }.reduce(_ && _),
-        "full_outer")
-    val base = joined.select(
-      meta.schema.map(f => col(s"t.`${f.name}`").as(f.name)) ++
-        src.columns.filter(_.startsWith("__s_")).toSeq.map(c => col(s"s.`$c`")) ++
-        Seq(
-          coalesce(col("t.__thit"), lit(false)).as("__thit"),
-          coalesce(col("s.__shit"), lit(false)).as("__shit")): _*)
-
-    val isM = col("__thit") && col("__shit")
-    val isS = !col("__thit") && col("__shit")
-    val result = base
-      .withColumn("__keep",
-        when(isM, keepChain(matched, lit(true)))
-          .when(isS, keepChain(notMatched, lit(false)))
-          .otherwise(keepChain(notMatchedBySource, lit(true))))
-      .where(col("__keep"))
-      .select(meta.schema.map { f =>
-        val nul = lit(null).cast(f.dataType)
-        when(isM, valueChain(matched, f.name, col(f.name), col(f.name)))
-          .when(isS, valueChain(notMatched, f.name, nul, nul))
-          .otherwise(valueChain(notMatchedBySource, f.name, col(f.name), col(f.name)))
-          .cast(f.dataType).as(f.name)
-      }.toSeq: _*)
-
-    // GENERATED ALWAYS AS: recompute any generated column a branch did
-    // not assign explicitly — an UPDATE of a referenced column must not
-    // leave the stale generated value (mirrors update/updateMor)
-    val explicitGen = (matched ++ notMatched ++ notMatchedBySource)
-      .flatMap(_.values).flatMap(_.keys).toSet
-    val written = writeBatch(spark, root, regenerate(result, meta, explicitGen), meta)
-    require(
-      commit(spark, root, s0.version + 1, advanceIdentityHw(meta, written), carry ++ written),
-      s"LakeTable.mergeClauses: concurrent commit at $root (retry on a fresh snapshot)")
-    MergeStats(s0.version + 1, affectedParts, rewrite.size, carry.size, written.size,
-      filesProbed = probed)
-    } finally releaseSrc()
-  }
-
-  /** [[mergeClauses]] with the standard optimistic-concurrency retry
-    * loop (see [[mergeWithRetry]]).
-    */
-  def mergeClausesWithRetry(
-      spark: SparkSession,
-      root: String,
-      source: DataFrame,
-      keyCols: Seq[String],
-      matched: Seq[MergeBranch],
-      notMatched: Seq[MergeBranch],
-      notMatchedBySource: Seq[MergeBranch],
-      partitionCol: String,
+      nullSafeKeys: Boolean = false,
       maxRetries: Int = 3,
-      metaUpdate: TableMeta => TableMeta = identity,
-      nullSafeKeys: Boolean = false): MergeStats =
-    withCommitRetry(maxRetries)(retriesLeft =>
-      try Some(mergeClauses(spark, root, source, keyCols, matched, notMatched,
-        notMatchedBySource, partitionCol, metaUpdate, nullSafeKeys))
-      catch {
-        case e: IllegalArgumentException
-            if e.getMessage != null && e.getMessage.contains("concurrent commit") &&
-              retriesLeft > 0 => None
-      })
+      preCommit: () => Unit = () => ()): MergeStats =
+    withCommitRetry(maxRetries) {
+      val s0 = snapshot(spark, root)
+      if (isMor(s0) && !nullSafeKeys)
+        mergeClausesMorAt(spark, root, s0, source, keyCols, matched, notMatched,
+          notMatchedBySource, partitionCol, metaUpdate, preCommit)
+      else {
+        require(s0.version > 0, s"LakeTable.mergeClauses: no committed snapshot at $root")
+        val meta = metaUpdate(s0.meta.get)
+        require(meta.partitionCol == partitionCol,
+          s"LakeTable.mergeClauses: table is partitioned by ${meta.partitionCol}, not $partitionCol")
+        notMatched.foreach(b => require(b.values.isDefined,
+          "LakeTable.mergeClauses: NOT MATCHED clauses must INSERT"))
+        // identity invariants: UPDATE branches may never SET an identity
+        // column, and INSERT branches may assign a GENERATED ALWAYS AS
+        // IDENTITY column never (BY DEFAULT may) — same gates as
+        // update()/append(), enforced statically on the clause shapes
+        requireMergeIdentityGates(meta, matched ++ notMatchedBySource, notMatched, "mergeClauses")
+        // the source is evaluated several times below (null-key probe, key
+        // distinct for the file probe, and the full-outer merge join) — for
+        // an expensive source (a matview refresh's signed-delta aggregate)
+        // each evaluation would recompute the whole delta. Persist it for
+        // the length of THIS statement only: batch-sized by construction
+        // (the merge input, never the table), released before returning.
+        val (src, releaseSrc) = persistForStatement(source)
+        val srcKeys = src.select(keyCols.map(col): _*).distinct()
+        try {
+
+        // rewrite set: with by-source clauses every target row's fate depends
+        // on the join — no file can carry; otherwise identical to merge()
+        val (rewrite, carry, probed, affectedParts) =
+          if (notMatchedBySource.nonEmpty)
+            (s0.entries, Seq.empty[Entry], s0.entries.size,
+              s0.entries.map(_.part).distinct.size)
+          else {
+            // stats/Bloom pruning is sound only for non-null keys (NULL is
+            // outside every min/max bound) — a null-safe merge whose batch
+            // carries a NULL key must probe every entry. Null presence and
+            // the probe's min/max bounds come from ONE fold over the
+            // persisted source (previously a separate isEmpty probe + a
+            // two-stage aggregate).
+            val keyDts = keyCols.map(k => src.schema(k).dataType)
+            val (foldBounds, keyHasNull) =
+              foldKeyInfo(src.select(keyCols.map(col): _*), keyDts)
+            val srcHasNullKey = nullSafeKeys && keyHasNull.exists(identity)
+            val mayMatch =
+              if (srcHasNullKey) (_: Entry) => true
+              else keyProbeFilter(spark, root, meta, keyCols, srcKeys, Some(src),
+                Some(keyCols.zip(foldBounds).toMap))
+            val probeEntries = s0.entries.filter(mayMatch)
+            val semiCond = (t: String, k: String) =>
+              keyCols.map { c =>
+                if (nullSafeKeys) col(s"$t.`$c`") <=> col(s"$k.`$c`")
+                else col(s"$t.`$c`") === col(s"$k.`$c`")
+              }.reduce(_ && _)
+            val (inMatched, matchedCount) =
+              if (probeEntries.isEmpty) ((_: Entry) => false, 0)
+              else partitionMatcher(meta,
+                readEntries(spark, root, meta.schema, probeEntries).as("t")
+                  .join(broadcast(srcKeys).as("k"), semiCond("t", "k"), "left_semi"))
+            val (rw, cy) =
+              s0.entries.partition(e => inMatched(e) && mayMatch(e))
+            (rw, cy, probeEntries.size, matchedCount)
+          }
+
+        val joined = readEntries(spark, root, meta.schema, rewrite)
+          .withColumn("__thit", lit(true)).as("t")
+          .join(
+            src.withColumn("__shit", lit(true)).as("s"),
+            keyCols.map { k =>
+              if (nullSafeKeys) col(s"t.`$k`") <=> col(s"s.`$k`")
+              else col(s"t.`$k`") === col(s"s.`$k`")
+            }.reduce(_ && _),
+            "full_outer")
+        val base = joined.select(
+          meta.schema.map(f => col(s"t.`${f.name}`").as(f.name)) ++
+            src.columns.filter(_.startsWith("__s_")).toSeq.map(c => col(s"s.`$c`")) ++
+            Seq(
+              coalesce(col("t.__thit"), lit(false)).as("__thit"),
+              coalesce(col("s.__shit"), lit(false)).as("__shit")): _*)
+
+        val isM = col("__thit") && col("__shit")
+        val isS = !col("__thit") && col("__shit")
+        val result = base
+          .withColumn("__keep",
+            when(isM, keepChain(matched, lit(true)))
+              .when(isS, keepChain(notMatched, lit(false)))
+              .otherwise(keepChain(notMatchedBySource, lit(true))))
+          .where(col("__keep"))
+          .select(meta.schema.map { f =>
+            val nul = lit(null).cast(f.dataType)
+            when(isM, valueChain(matched, f.name, col(f.name), col(f.name)))
+              .when(isS, valueChain(notMatched, f.name, nul, nul))
+              .otherwise(valueChain(notMatchedBySource, f.name, col(f.name), col(f.name)))
+              .cast(f.dataType).as(f.name)
+          }.toSeq: _*)
+
+        // GENERATED ALWAYS AS: recompute any generated column a branch did
+        // not assign explicitly — an UPDATE of a referenced column must not
+        // leave the stale generated value (mirrors update/updateMor)
+        val explicitGen = (matched ++ notMatched ++ notMatchedBySource)
+          .flatMap(_.values).flatMap(_.keys).toSet
+        val written = writeBatch(spark, root, regenerate(result, meta, explicitGen), meta)
+        preCommit()
+        val landed = commitNext(spark, root, "mergeClauses", s0,
+          advanceIdentityHw(meta, written), carry ++ written)
+        MergeStats(landed, affectedParts, rewrite.size, carry.size, written.size,
+          filesProbed = probed)
+        } finally releaseSrc()
+      }
+    }
 
   /** Merge-on-read clause MERGE: the `deleteMode=mor` arm of
     * [[mergeClauses]]. Matched rows a clause touches TOMBSTONE into
@@ -4259,7 +4161,7 @@ object LakeTable {
     * apply (upsert + delete-the-rest) on a 100 TB table writes only
     * the day's churn.
     */
-  def mergeClausesMor(
+  private[graft] def mergeClausesMor(
       spark: SparkSession,
       root: String,
       source: DataFrame,
@@ -4269,8 +4171,24 @@ object LakeTable {
       notMatchedBySource: Seq[MergeBranch] = Nil,
       partitionCol: String,
       metaUpdate: TableMeta => TableMeta = identity,
-      preCommit: () => Unit = () => ()): MergeStats = {
-    val s0 = snapshot(spark, root)
+      maxRetries: Int = 3,
+      preCommit: () => Unit = () => ()): MergeStats =
+    withCommitRetry(maxRetries)(
+      mergeClausesMorAt(spark, root, snapshot(spark, root), source, keyCols, matched,
+        notMatched, notMatchedBySource, partitionCol, metaUpdate, preCommit))
+
+  private def mergeClausesMorAt(
+      spark: SparkSession,
+      root: String,
+      s0: Snapshot,
+      source: DataFrame,
+      keyCols: Seq[String],
+      matched: Seq[MergeBranch],
+      notMatched: Seq[MergeBranch],
+      notMatchedBySource: Seq[MergeBranch],
+      partitionCol: String,
+      metaUpdate: TableMeta => TableMeta,
+      preCommit: () => Unit): MergeStats = {
     require(s0.version > 0, s"LakeTable.mergeClausesMor: no committed snapshot at $root")
     val meta = metaUpdate(s0.meta.get)
     require(meta.partitionCol == partitionCol,
@@ -4291,21 +4209,7 @@ object LakeTable {
       if (notMatchedBySource.nonEmpty) (_: Entry) => true
       else keyProbeFilter(spark, root, meta, keyCols, srcKeys)
     val probeEntries = s0.entries.filter(mayMatch)
-    val byKey = probeEntries.map(e => Dv.suffixKey(e.rel) -> e).toMap
-    val (dvd, clean) = probeEntries.partition(_.dv.isDefined)
-    def withPos(es: Seq[Entry], applyDv: Boolean): Option[DataFrame] =
-      if (es.isEmpty) None
-      else {
-        val df = spark.read.schema(meta.schema)
-          .parquet(es.map(e => s"${dataRoot(root)}/${e.rel}"): _*)
-        val kept = if (applyDv) df.where(dvKeepColumn(spark, root, es)) else df
-        Some(kept
-          .withColumn("__file", col("_metadata.file_path"))
-          .withColumn("__pos", col("_metadata.row_index")))
-      }
-    val target: Option[DataFrame] =
-      (withPos(clean, applyDv = false).toSeq ++ withPos(dvd, applyDv = true).toSeq)
-        .reduceOption(_.unionByName(_))
+    val target = positionScan(spark, root, meta.schema, probeEntries)
 
     val srcCols = source.columns.filter(_.startsWith("__s_")).toSeq
     val base = target match {
@@ -4346,12 +4250,8 @@ object LakeTable {
       .where(col("__mfire") || col("__bfire") || col("__ins"))
       .persist()
     try {
-      val posAgg = GraftColumnBridge.column(
-        PosBitmapAgg(exprOf(col("__pos"))).toAggregateExpression())
       val sidecars = publishDvSidecars(spark, root,
-        work.where(col("__mfire") || col("__bfire"))
-          .groupBy(col("__file")).agg(posAgg.as("__bm")),
-        probeEntries.flatMap(e => e.dv.map(d => Dv.suffixKey(e.rel) -> d.rel)).toMap)
+        work.where(col("__mfire") || col("__bfire")), probeEntries)
       val post = work
         .where((col("__mfire") && col("__mkeep")) ||
           (col("__bfire") && col("__bkeep")) || col("__ins"))
@@ -4368,16 +4268,7 @@ object LakeTable {
       val written =
         if (post.isEmpty) Nil
         else writeBatch(spark, root, regenerate(post, meta, explicitGen), meta)
-      val tombstoned: Map[String, Entry] = sidecars.iterator.map { case (key, rel, card) =>
-        val e = byKey(key)
-        val entry =
-          if (e.rows.contains(card)) None // every row moved out -> drop the file
-          else Some(e.copy(dv = Some(DvRef(rel, card))))
-        e.rel -> entry.orNull
-      }.toMap
-      val newEntries = s0.entries.flatMap { e =>
-        if (!tombstoned.contains(e.rel)) Some(e) else Option(tombstoned(e.rel))
-      } ++ written
+      val t = foldTombstones(s0.entries, probeEntries, sidecars)
       // lost race → metadata-only rebase (see deleteMor); an identity
       // high-water advance changes meta, which condition 1 refuses —
       // those tables keep the recompute. dvMerge only WITHOUT insert
@@ -4387,44 +4278,17 @@ object LakeTable {
       // state the winner changed, and position disjointness cannot see
       // it (we hold no position for an unfired row)
       preCommit()
-      val finalMeta = advanceIdentityHw(meta, written)
-      val landed: Long =
-        if (commit(spark, root, s0.version + 1, finalMeta, newEntries)) s0.version + 1
-        else rebaseCommit(spark, root, s0, finalMeta,
-          removed = s0.entries.filter(e => tombstoned.contains(e.rel)),
-          written = tombstoned.values.filter(_ != null).toSeq ++ written,
-          mayMatch = mayMatch, dvMerge = notMatched.isEmpty)
-          .getOrElse(throw new IllegalArgumentException(
-            s"LakeTable.mergeClausesMor: concurrent commit at $root (retry on a fresh snapshot)"))
+      val landed = commitOrRebase(spark, root, "mergeClausesMor", s0,
+        advanceIdentityHw(meta, written), t.entries ++ written, t.removed, t.dvd ++ written,
+        mayMatch, dvMerge = notMatched.isEmpty)
       MergeStats(landed,
-        matchedPartitions = sidecars.map(h => byKey(h._1).part).distinct.length,
-        filesRewritten = tombstoned.size,
-        filesCarried = s0.entries.size - tombstoned.size,
+        matchedPartitions = t.removed.map(_.part).distinct.length,
+        filesRewritten = t.removed.size,
+        filesCarried = s0.entries.size - t.removed.size,
         filesWritten = written.size,
         filesProbed = probeEntries.size)
     } finally work.unpersist()
   }
-
-  /** [[mergeClausesMor]] with the standard optimistic-retry loop. */
-  def mergeClausesMorWithRetry(
-      spark: SparkSession,
-      root: String,
-      source: DataFrame,
-      keyCols: Seq[String],
-      matched: Seq[MergeBranch],
-      notMatched: Seq[MergeBranch],
-      notMatchedBySource: Seq[MergeBranch] = Nil,
-      partitionCol: String,
-      maxRetries: Int = 3,
-      metaUpdate: TableMeta => TableMeta = identity): MergeStats =
-    withCommitRetry(maxRetries)(retriesLeft =>
-      try Some(mergeClausesMor(spark, root, source, keyCols, matched, notMatched,
-        notMatchedBySource, partitionCol, metaUpdate))
-      catch {
-        case e: IllegalArgumentException
-            if e.getMessage != null && e.getMessage.contains("concurrent commit") &&
-              retriesLeft > 0 => None
-      })
 
   // ---- OPTIMIZE (compaction) -----------------------------------------
 
@@ -4467,97 +4331,75 @@ object LakeTable {
       // compacts the hot partitions. Conservative by construction: an
       // unprunable predicate shape keeps groups in (compacting more
       // than asked is content-preserving; losing a group is not).
-      where: Option[String] = None): MergeStats =
-    optimizeImpl(spark, root, minFilesPerPartition, maxRecordsPerFile, maxRetries, () => (),
-      sortCols, zorderCols, where)
-
-  @annotation.tailrec
-  private[graft] def optimizeImpl(
-      spark: SparkSession,
-      root: String,
-      minFilesPerPartition: Int,
-      maxRecordsPerFile: Long,
-      maxRetries: Int,
-      preCommit: () => Unit,
-      sortCols: Seq[String] = Nil,
-      zorderCols: Seq[String] = Nil,
-      where: Option[String] = None): MergeStats = {
-    val s0 = snapshot(spark, root)
-    require(s0.version > 0, s"LakeTable.optimize: no committed snapshot at $root")
-    val meta = s0.meta.get
-    require(sortCols.isEmpty || zorderCols.isEmpty,
-      "LakeTable.optimize: pass sortCols (lexicographic) OR zorderCols (Morton), not both")
-    (sortCols ++ zorderCols).foreach(c => require(meta.schema.fieldNames.contains(c),
-      s"LakeTable.optimize: sort column $c not in table schema"))
-    // partition groups are (spec, part) pairs: under spec evolution the
-    // same string can name different slices in different spec spaces.
-    // Compaction rewrites through writeBatch, which files rows under
-    // the CURRENT spec — OPTIMIZE is therefore also the spec MIGRATION
-    // verb (old-spec files fold into current-spec layout as they compact)
-    val fileCounts = s0.entries.groupBy(e => (e.spec, e.part)).map { case (p, es) => p -> es.size }
-    // partitions with enough small files to pack, plus any partition
-    // holding a DV'd file: OPTIMIZE is also the DV MATERIALIZATION verb
-    // (rewrite minus dead rows, drop the vector) that restores
-    // pure-columnar scans after merge-on-read deletes; with
-    // minFilesPerPartition=1 every old-spec group rewrites too — the
-    // explicit full-migration call
-    val compactParts0 = fileCounts.filter(_._2 >= minFilesPerPartition).keySet ++
-      s0.entries.filter(_.dv.isDefined).map(e => (e.spec, e.part))
-    // WHERE scope: the same metadata-only pruning the scan runs (per-spec
-    // partition arms, stats, Blooms) selects the groups that may hold a
-    // matching row; everything else carries untouched
-    val compactParts = where.fold(compactParts0) { w =>
-      val parsed = spark.sessionState.sqlParser.parseExpression(w)
-      // Nested-field references (multi-part names, e.g. s.cust) have no
-      // top-level stats/partition arm to prune on — per the stated
-      // contract, an unprunable predicate shape conservatively keeps
-      // every group in rather than throwing. A single-part name that
-      // matches nothing is still a hard error (typo detection).
-      val nested = parsed.collect {
-        case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-            if a.nameParts.length > 1 => a
-      }
-      if (nested.nonEmpty) compactParts0
-      else {
-        val resolved = parsed.transformUp {
-          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-            val f = meta.schema.fields.find(_.name.equalsIgnoreCase(a.name)).getOrElse(
-              throw new IllegalArgumentException(
-                s"LakeTable.optimize: WHERE references unknown column ${a.name}"))
-            org.apache.spark.sql.catalyst.expressions.AttributeReference(f.name, f.dataType)()
+      where: Option[String] = None,
+      preCommit: () => Unit = () => ()): MergeStats =
+    withCommitRetry(maxRetries) {
+      val s0 = snapshot(spark, root)
+      require(s0.version > 0, s"LakeTable.optimize: no committed snapshot at $root")
+      val meta = s0.meta.get
+      require(sortCols.isEmpty || zorderCols.isEmpty,
+        "LakeTable.optimize: pass sortCols (lexicographic) OR zorderCols (Morton), not both")
+      (sortCols ++ zorderCols).foreach(c => require(meta.schema.fieldNames.contains(c),
+        s"LakeTable.optimize: sort column $c not in table schema"))
+      // partition groups are (spec, part) pairs: under spec evolution the
+      // same string can name different slices in different spec spaces.
+      // Compaction rewrites through writeBatch, which files rows under
+      // the CURRENT spec — OPTIMIZE is therefore also the spec MIGRATION
+      // verb (old-spec files fold into current-spec layout as they compact)
+      val fileCounts = s0.entries.groupBy(e => (e.spec, e.part)).map { case (p, es) => p -> es.size }
+      // partitions with enough small files to pack, plus any partition
+      // holding a DV'd file: OPTIMIZE is also the DV MATERIALIZATION verb
+      // (rewrite minus dead rows, drop the vector) that restores
+      // pure-columnar scans after merge-on-read deletes; with
+      // minFilesPerPartition=1 every old-spec group rewrites too — the
+      // explicit full-migration call
+      val compactParts0 = fileCounts.filter(_._2 >= minFilesPerPartition).keySet ++
+        s0.entries.filter(_.dv.isDefined).map(e => (e.spec, e.part))
+      // WHERE scope: the same metadata-only pruning the scan runs (per-spec
+      // partition arms, stats, Blooms) selects the groups that may hold a
+      // matching row; everything else carries untouched
+      val compactParts = where.fold(compactParts0) { w =>
+        val parsed = spark.sessionState.sqlParser.parseExpression(w)
+        // Nested-field references (multi-part names, e.g. s.cust) have no
+        // top-level stats/partition arm to prune on — per the stated
+        // contract, an unprunable predicate shape conservatively keeps
+        // every group in rather than throwing. A single-part name that
+        // matches nothing is still a hard error (typo detection).
+        val nested = parsed.collect {
+          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+              if a.nameParts.length > 1 => a
         }
-        val idx = new graft.sources.lake.LakeFileIndex(spark, root, meta, s0.entries)
-        val scoped = idx.pruneEntries(Seq(resolved)).map(e => (e.spec, e.part)).toSet
-        compactParts0 & scoped
+        if (nested.nonEmpty) compactParts0
+        else {
+          val resolved = parsed.transformUp {
+            case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
+              val f = meta.schema.fields.find(_.name.equalsIgnoreCase(a.name)).getOrElse(
+                throw new IllegalArgumentException(
+                  s"LakeTable.optimize: WHERE references unknown column ${a.name}"))
+              org.apache.spark.sql.catalyst.expressions.AttributeReference(f.name, f.dataType)()
+          }
+          val idx = new graft.sources.lake.LakeFileIndex(spark, root, meta, s0.entries)
+          val scoped = idx.pruneEntries(Seq(resolved)).map(e => (e.spec, e.part)).toSet
+          compactParts0 & scoped
+        }
+      }
+      if (compactParts.isEmpty) MergeStats(s0.version, 0, 0, s0.entries.size, 0)
+      else {
+        val (rewrite, carry) = s0.entries.partition(e => compactParts.contains((e.spec, e.part)))
+        val df = readEntries(spark, root, meta.schema, rewrite)
+        // already-validated rows being compacted — no CHECK re-validation
+        val written = writeBatch(spark, root, df, meta, maxRecordsPerFile, sortCols, zorderCols,
+          enforceChecks = false)
+        preCommit()
+        // lost race → metadata-only rebase: compaction never needs the
+        // winner's new files (compacting fewer groups than a fresh run is
+        // content-preserving), so the only conditions are untouched
+        // metadata and a byte-identical rewrite set at head
+        val landed = commitOrRebase(spark, root, "optimize", s0, meta, carry ++ written,
+          rewrite, written, _ => false)
+        MergeStats(landed, compactParts.size, rewrite.size, carry.size, written.size)
       }
     }
-    if (compactParts.isEmpty)
-      return MergeStats(s0.version, 0, 0, s0.entries.size, 0)
-    val (rewrite, carry) = s0.entries.partition(e => compactParts.contains((e.spec, e.part)))
-    val df = readEntries(spark, root, meta.schema, rewrite)
-    // already-validated rows being compacted — no CHECK re-validation
-    val written = writeBatch(spark, root, df, meta, maxRecordsPerFile, sortCols, zorderCols,
-      enforceChecks = false)
-    preCommit()
-    val ok = commit(spark, root, s0.version + 1, meta, carry ++ written)
-    if (ok)
-      MergeStats(s0.version + 1, compactParts.size, rewrite.size, carry.size, written.size)
-    else {
-      // lost race → metadata-only rebase: compaction never needs the
-      // winner's new files (compacting fewer groups than a fresh run is
-      // content-preserving), so the only conditions are untouched
-      // metadata and a byte-identical rewrite set at head
-      rebaseCommit(spark, root, s0, meta, rewrite, written, _ => false) match {
-        case Some(v) =>
-          MergeStats(v, compactParts.size, rewrite.size, carry.size, written.size)
-        case None =>
-          require(maxRetries > 0,
-            s"LakeTable.optimize: concurrent commit at $root (retries exhausted)")
-          optimizeImpl(spark, root, minFilesPerPartition, maxRecordsPerFile, maxRetries - 1,
-            preCommit, sortCols, zorderCols, where)
-      }
-    }
-  }
 
   // ---- CDC -----------------------------------------------------------
 
@@ -4976,8 +4818,9 @@ object LakeTable {
       s"LakeTable.fastForward: main is at v${m0.version} but branch '$name' forked " +
         s"at v$base — main has advanced, the branch is not a linear descendant " +
         "(rebase the branch or merge manually)")
-    require(commit(spark, r, m0.version + 1, bs.meta.get, bs.entries),
-      s"LakeTable.fastForward: concurrent commit at $r (retry on a fresh snapshot)")
+    if (!commit(spark, r, m0.version + 1, bs.meta.get, bs.entries))
+      throw new CommitConflict(
+        s"LakeTable.fastForward: concurrent commit at $r (retry on a fresh snapshot)")
     writeBranchBase(spark, r, name, m0.version + 1, replace = true)
     m0.version + 1
   }

@@ -411,7 +411,7 @@ object MatView {
     try {
       // nullSafeKeys: GROUP BY treats NULL as a real group — the view
       // merge must match it, or every refresh re-inserts the NULL group
-      LakeTable.mergeClausesWithRetry(
+      LakeTable.mergeClauses(
         spark, mvRoot, source, keys, matched, notMatched, Nil,
         partitionCol = meta.partitionCol, metaUpdate = stamp, nullSafeKeys = true)
       head
@@ -484,7 +484,7 @@ object MatView {
         (keys.map(k => k -> col(s"__s_$k")) ++
           stored.map(c => c -> insertValue(deltaOnly, c))).toMap)))
     try {
-      LakeTable.mergeClausesWithRetry(
+      LakeTable.mergeClauses(
         spark, mvRoot, source, keys, matched, notMatched, Nil,
         partitionCol = meta.partitionCol, metaUpdate = stamp, nullSafeKeys = true)
       headF

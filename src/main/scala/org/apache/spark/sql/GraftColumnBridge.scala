@@ -20,6 +20,12 @@ object GraftColumnBridge {
       cols: Array[connector.catalog.Column]): types.StructType =
     connector.catalog.CatalogV2Util.v2ColumnsToStructType(cols.toSeq)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+  /** Block until every listener-bus event posted so far (jobs, SQL
+    * executions, QueryExecutionListener callbacks) has been delivered —
+    * the bus is private[spark].
+    */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
   /** Top-level conjuncts of `c`'s ColumnNode tree (the pre-analysis shape
     * Spark 4 Columns carry: comparisons are UnresolvedFunction nodes named
     * "=", "<", "and", …, not catalyst BinaryComparisons — and the node

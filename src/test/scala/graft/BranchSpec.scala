@@ -266,7 +266,7 @@ class BranchSpec extends SparkSpec {
     // written — the delta has no landed-merge anchor
     LakeTable.delete(spark, ref, col("p") === "0", "p")
     // main concurrently rewrites rows INSIDE that read set
-    LakeTable.updateWithRetry(spark, root,
+    LakeTable.update(spark, root,
       col("p") === "0" && col("k") < 10, Map("v" -> lit(0L)), "p")
     val e = intercept[IllegalStateException](LakeTable.mergeBranch(spark, root, "dev"))
     assert(e.getMessage.contains("OVERLAPPING"), e.getMessage)

@@ -155,7 +155,7 @@ class DvSpec extends SparkSpec {
     val r2 = LakeTable.mergeRebases.get()
     var fired3 = 0
     val e = intercept[IllegalArgumentException](
-      LakeTable.deleteMor(spark, root, col("k") === 50, "p", preCommit = () => {
+      LakeTable.deleteMor(spark, root, col("k") === 50, "p", maxRetries = 0, preCommit = () => {
         fired3 += 1
         if (fired3 == 1) LakeTable.append(spark, root,
           Seq((50L, "9", 5L)).toDF("k", "p", "v"))
@@ -207,7 +207,7 @@ class DvSpec extends SparkSpec {
     var fired3 = 0
     val e = intercept[IllegalArgumentException](
       LakeTable.updateMor(spark, root, col("k") % 10 === 2, Map("v" -> lit(1L)), "p",
-        preCommit = () => {
+        maxRetries = 0, preCommit = () => {
           fired3 += 1
           if (fired3 == 1) LakeTable.deleteMor(spark, root, col("k") === 2, "p")
         }))
@@ -251,7 +251,7 @@ class DvSpec extends SparkSpec {
         notMatched = Seq(LakeTable.MergeBranch(None, Some(Map(
           "k" -> col("__s_k"), "p" -> col("__s_p"), "v" -> col("__s_v"))))),
         notMatchedBySource = Nil, partitionCol = "p",
-        preCommit = () => {
+        maxRetries = 0, preCommit = () => {
           fired2 += 1
           if (fired2 == 1) LakeTable.deleteMor(spark, root, col("k") % 10 === 9, "p")
         }))

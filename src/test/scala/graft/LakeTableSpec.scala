@@ -82,7 +82,7 @@ class LakeTableSpec extends SparkSpec {
     val br = LakeTable.branchRef(root, "exp")
     LakeTable.branch(spark, root, "exp")
     assert(LakeTable.snapshot(spark, br).meta.get.priorSpecs.nonEmpty)
-    LakeTable.deleteWithRetry(spark, br, col("k") < 3, "k")
+    LakeTable.delete(spark, br, col("k") < 3, "k")
     assert(LakeTable.read(spark, br).count() === 315 - 3)
     assert(LakeTable.read(spark, root).count() === 315, "main pinned untouched")
   }
@@ -99,7 +99,7 @@ class LakeTableSpec extends SparkSpec {
     val srcB = spark.range(5000, 5010).select(
       col("id").as("k"), lit("9").as("p"), lit(1L).as("v"))
     var fired = 0
-    val stats = LakeTable.mergeImpl(spark, root, srcA, Seq("k"), "p", () => {
+    val stats = LakeTable.merge(spark, root, srcA, Seq("k"), "p", preCommit = () => {
       fired += 1
       if (fired == 1) LakeTable.merge(spark, root, srcB, Seq("k"), "p")
     })
@@ -118,7 +118,7 @@ class LakeTableSpec extends SparkSpec {
     val srcA2 = baseDf.where(col("k") >= 20 && col("k") < 30).withColumn("v", lit(100L))
     val srcB2 = baseDf.where(col("k") === 25).withColumn("v", lit(200L))
     var fired2 = 0
-    LakeTable.mergeWithRetryImpl(spark, root, srcA2, Seq("k"), "p", 3, () => {
+    LakeTable.merge(spark, root, srcA2, Seq("k"), "p", maxRetries = 3, preCommit = () => {
       fired2 += 1
       if (fired2 == 1) LakeTable.merge(spark, root, srcB2, Seq("k"), "p")
     })
@@ -126,6 +126,64 @@ class LakeTableSpec extends SparkSpec {
     assert(LakeTable.mergeRebases.get() === r1, "no rebase on a true conflict")
     assert(LakeTable.read(spark, root).where(col("k") === 25)
       .head.getAs[Long]("v") === 100L, "A2 lands after B2, sequentially")
+
+    // the same holds for every DML verb, COW and MOR: a winner whose new
+    // file MAY match the loser's predicate/keys forces the recompute
+    import spark.implicits._
+    def withS(df: org.apache.spark.sql.DataFrame) =
+      df.columns.foldLeft(df)((d, c) => d.withColumn("__s_" + c, col(c)))
+    val src50 = withS(Seq((50L, "2", 7L)).toDF("k", "p", "v"))
+    val setV = Seq(LakeTable.MergeBranch(None, Some(Map("v" -> col("__s_v")))))
+    type Run = (String, Int, () => Unit) => LakeTable.MergeStats
+    // (verb, table deleteMode, the loser: every one touches key 50)
+    val verbs: Seq[(String, String, Run)] = Seq(
+      ("delete", "cow", (r, n, hook) =>
+        LakeTable.delete(spark, r, col("k") === 50, "p", n, hook)),
+      ("update", "cow", (r, n, hook) =>
+        LakeTable.update(spark, r, col("k") === 50, Map("v" -> lit(1L)), "p", n, hook)),
+      ("mergeClauses", "cow", (r, n, hook) =>
+        LakeTable.mergeClauses(spark, r, src50, Seq("k"), setV, Nil, Nil, "p",
+          maxRetries = n, preCommit = hook)),
+      ("deleteMor", "mor", (r, n, hook) =>
+        LakeTable.deleteMor(spark, r, col("k") === 50, "p", n, hook)),
+      ("updateMor", "mor", (r, n, hook) =>
+        LakeTable.updateMor(spark, r, col("k") === 50, Map("v" -> lit(1L)), "p", n, hook)),
+      ("mergeClausesMor", "mor", (r, n, hook) =>
+        LakeTable.mergeClausesMor(spark, r, src50, Seq("k"), setV, Nil, Nil, "p",
+          maxRetries = n, preCommit = hook)))
+    // the winner appends another key-50 row: its new file MAY match, so
+    // no verb can rebase over it
+    def winner(r: String): Unit =
+      LakeTable.append(spark, r, Seq((50L, "9", 5L)).toDF("k", "p", "v"))
+    def rows(r: String) =
+      LakeTable.read(spark, r).select("k", "p", "v").orderBy("k", "p", "v").collect().toSeq
+    verbs.foreach { case (verb, mode, run) =>
+      def fresh(): String = {
+        val r = freshRoot()
+        LakeTable.init(spark, r, baseDf, "p", statsCol = Some("k"), deleteMode = mode)
+        r
+      }
+      // a preCommit hook that lets the winner in once, and its call count
+      def racedBy(r: String): (() => Unit, () => Int) = {
+        var calls = 0
+        (() => { calls += 1; if (calls == 1) winner(r) }, () => calls)
+      }
+      val raced = fresh()
+      val rebases = LakeTable.mergeRebases.get()
+      // no retries left: the conflict surfaces, typed, and lands nothing
+      val (hook0, _) = racedBy(raced)
+      val e = intercept[LakeTable.CommitConflict](run(raced, 0, hook0))
+      assert(e.getMessage.contains("concurrent commit"), s"$verb: ${e.getMessage}")
+      // with retries: the loser recomputes on the winner's snapshot
+      val (hook, calls) = racedBy(raced)
+      run(raced, 3, hook)
+      assert(calls() === 2, s"$verb: the loser must recompute, not rebase")
+      assert(LakeTable.mergeRebases.get() === rebases, s"$verb: no rebase over a may-match winner")
+      val sequential = fresh()
+      winner(sequential); winner(sequential); run(sequential, 0, () => ())
+      assert(rows(raced) === rows(sequential),
+        s"$verb: content must equal the sequential application")
+    }
   }
 
   test("lost-commit rebase covers UPDATE, DELETE and OPTIMIZE for disjoint writers") {
@@ -138,7 +196,7 @@ class LakeTableSpec extends SparkSpec {
     val interloper = spark.range(5000, 5010).select(
       col("id").as("k"), lit("9").as("p"), lit(1L).as("v"))
     var fired = 0
-    val del = LakeTable.deleteImpl(spark, root, col("k") < 10, "p", () => {
+    val del = LakeTable.delete(spark, root, col("k") < 10, "p", preCommit = () => {
       fired += 1
       if (fired == 1) LakeTable.append(spark, root, interloper)
     })
@@ -153,8 +211,8 @@ class LakeTableSpec extends SparkSpec {
     // UPDATE loses to another disjoint append → rebase again
     val r1 = LakeTable.mergeRebases.get()
     var fired2 = 0
-    val upd = LakeTable.updateImpl(spark, root, col("k") >= 290 && col("k") < 300,
-      Map("v" -> lit(777L)), "p", () => {
+    val upd = LakeTable.update(spark, root, col("k") >= 290 && col("k") < 300,
+      Map("v" -> lit(777L)), "p", preCommit = () => {
         fired2 += 1
         if (fired2 == 1) LakeTable.append(spark, root,
           spark.range(6000, 6005).select(col("id").as("k"), lit("9").as("p"), lit(2L).as("v")))
@@ -167,16 +225,17 @@ class LakeTableSpec extends SparkSpec {
 
     // UPDATE loses to a writer whose NEW file may hold a matching row
     // → the rebase refuses (the winner's rows must re-enter the probe);
-    // updateImpl surfaces the crisp concurrent-commit error the retry
-    // wrapper recomputes from
+    // with no retries left, update surfaces the crisp concurrent-commit
+    // error the retry loop recomputes from
     val r2 = LakeTable.mergeRebases.get()
     var fired3 = 0
     val e = intercept[IllegalArgumentException](
-      LakeTable.updateImpl(spark, root, col("k") === 50, Map("v" -> lit(1L)), "p", () => {
-        fired3 += 1
-        if (fired3 == 1) LakeTable.append(spark, root,
-          Seq((50L, "9", 5L)).toDF("k", "p", "v"))
-      }))
+      LakeTable.update(spark, root, col("k") === 50, Map("v" -> lit(1L)), "p",
+        maxRetries = 0, preCommit = () => {
+          fired3 += 1
+          if (fired3 == 1) LakeTable.append(spark, root,
+            Seq((50L, "9", 5L)).toDF("k", "p", "v"))
+        }))
     assert(e.getMessage.contains("concurrent commit"))
     assert(LakeTable.mergeRebases.get() === r2, "no rebase when the winner may match")
 
@@ -185,7 +244,7 @@ class LakeTableSpec extends SparkSpec {
     val preSum = LakeTable.read(spark, root).agg(sum("v")).head.getLong(0)
     val r3 = LakeTable.mergeRebases.get()
     var fired4 = 0
-    LakeTable.optimizeImpl(spark, root, 2, 0L, 3, () => {
+    LakeTable.optimize(spark, root, 2, 0L, 3, preCommit = () => {
       fired4 += 1
       if (fired4 == 1) LakeTable.append(spark, root,
         spark.range(7000, 7005).select(col("id").as("k"), lit("9").as("p"), lit(3L).as("v")))
@@ -214,7 +273,7 @@ class LakeTableSpec extends SparkSpec {
         .select((col("k") + 1000L * i).as("k"), col("p"), col("v"))))
     LakeTable.read(spark, root).count() // warm the new head
     val p1 = LakeTable.manifestParses.get()
-    LakeTable.deleteWithRetry(spark, root, col("k") === 1001L, "p")
+    LakeTable.delete(spark, root, col("k") === 1001L, "p")
     LakeTable.read(spark, root).count()
     val d = LakeTable.manifestParses.get() - p1
     assert(d <= 2, s"a single-commit DML + re-read must parse O(1) manifests, got $d")
@@ -265,12 +324,12 @@ class LakeTableSpec extends SparkSpec {
 
     // DML spanning both specs: every file holding a matched row is
     // classified in ITS OWN spec space
-    LakeTable.deleteWithRetry(spark, root, col("k") % 10 === 5, "k")
+    LakeTable.delete(spark, root, col("k") % 10 === 5, "k")
     assert(LakeTable.read(spark, root).count() === 400 - 40)
     assert(LakeTable.read(spark, root).where(col("k") % 10 === 5).count() === 0)
 
     // updates recompute across specs too
-    LakeTable.updateWithRetry(spark, root, col("k") === 2 || col("k") === 1002,
+    LakeTable.update(spark, root, col("k") === 2 || col("k") === 1002,
       Map("v" -> lit(-1L)), "k")
     assert(LakeTable.read(spark, root).where(col("v") === -1L).count() === 2)
 
@@ -454,7 +513,7 @@ class LakeTableSpec extends SparkSpec {
         assert(LakeTable.commit(spark, root, s.version + 1, s.meta.get, s.entries)) // the "winner"
       }
     val src = baseDf.where(col("k") < 10).withColumn("v", col("v") + 7)
-    val stats = LakeTable.mergeWithRetryImpl(spark, root, src, Seq("k"), "p", 3, steal)
+    val stats = LakeTable.merge(spark, root, src, Seq("k"), "p", maxRetries = 3, preCommit = steal)
     assert(stole, "saboteur never ran — the race was not exercised")
     assert(stats.version === 3, s"expected the retry to land v3, got v${stats.version}")
     val got = LakeTable.read(spark, root)
@@ -628,7 +687,7 @@ class LakeTableSpec extends SparkSpec {
       .select((col("k") + 10000L).as("k"), col("p"), col("v"))
     val extraSum = extra.agg(sum("v")).head.getLong(0)
     LakeTable.append(spark, root, extra)
-    val raced = LakeTable.optimizeImpl(spark, root, 2, 0L, 3, steal)
+    val raced = LakeTable.optimize(spark, root, 2, 0L, 3, preCommit = steal)
     assert(stole && raced.version === LakeTable.snapshot(spark, root).version)
     assert(LakeTable.read(spark, root).agg(sum("v")).head.getLong(0) === preSum + extraSum)
   }
@@ -728,8 +787,18 @@ class LakeTableSpec extends SparkSpec {
     assert(s2.entries.forall(e => e.min.isEmpty && e.max.isEmpty))
     // and range pruning over the string column still prunes correctly
     val hit = LakeTable.pruneRangeOn(s0.meta.get, s0.entries, "s", "id-0000", "id-0049")
-    assert(hit.nonEmpty && hit.size < s0.entries.size ||
-      s0.entries.size <= 3) // tiny layouts may keep all files; never zero
+    assert(hit.nonEmpty, "never zero")
+    // every file above spans the whole key range; one contiguous id
+    // slice per partition makes the string bounds prunable: the range
+    // must keep the id 0..49 file and drop the id 100..149 one
+    val root3 = freshRoot()
+    LakeTable.init(spark, root3, base.withColumn("p", expr("k div 50").cast("string")),
+      "p", statsCols = Seq("s"))
+    val s3 = LakeTable.snapshot(spark, root3)
+    assert(s3.entries.map(_.part).distinct.size === 6, "one file group per id slice")
+    val hit3 = LakeTable.pruneRangeOn(s3.meta.get, s3.entries, "s", "id-0000", "id-0049")
+    assert(hit3.exists(_.part == "0") && !hit3.exists(_.part == "2"))
+    assert(hit3.size < s3.entries.size)
   }
 
   test("per-file stats stay correct when one task writes many partition dirs") {
@@ -1166,7 +1235,7 @@ class LakeTableSpec extends SparkSpec {
     val threads = (0 until n).map { i =>
       new Thread {
         override def run(): Unit =
-          try LakeTable.mergeWithRetry(spark, root, batch(i), Seq("k"), "p", maxRetries = n * 2)
+          try LakeTable.merge(spark, root, batch(i), Seq("k"), "p", maxRetries = n * 2)
           catch { case t: Throwable => errors.add(t) }
       }
     }
